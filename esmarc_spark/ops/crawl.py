@@ -29,13 +29,13 @@ from pyspark.sql import functions as F
 
 from esmarc_spark.ops import text
 from esmarc_spark.ops.kg_documents import (
+    CLASS_CASE,
     GND,
     TARGET,
-    _CLASS_CASE,
-    _SCHEMA_CLASS,
     doc_gazetteer,
     gazetteer_values_sql,
 )
+from esmarc_spark.pipeline.materialize import linked_to_triples
 
 ALLOWED_LANGS = ("en", "de")
 MIN_TOKENS = 8
@@ -68,43 +68,10 @@ def crawl_pipeline(spark: SparkSession, warc_path: str) -> DataFrame:
     m = kept.select(
         "url", F.explode(F.split("text", " ")).alias("surface_form")
     ).join(F.broadcast(gaz), "surface_form")
-    m = m.localCheckpoint(eager=False)
-
-    entity = F.concat(F.lit(TARGET), "entity_type", F.lit("/"), "authority_id")
-    schema_map = F.create_map(
-        *[F.lit(x) for kv in _SCHEMA_CLASS.items() for x in kv]
-    )
-    page_type = m.select("url").distinct().select(
-        F.col("url").alias("subj"),
-        F.lit("@type").alias("pred"),
-        F.lit("http://schema.org/CreativeWork").alias("obj"),
-    )
-    page_mentions = m.select(
-        F.col("url").alias("subj"),
-        F.lit("mentions").alias("pred"),
-        entity.alias("obj"),
-    ).distinct()
-    ents = m.groupBy("entity_type", "authority_id").agg(
-        F.min("surface_form").alias("pname")
-    )
-    e_type = ents.select(
-        entity.alias("subj"), F.lit("@type").alias("pred"),
-        schema_map[F.col("entity_type")].alias("obj"),
-    )
-    e_same = ents.select(
-        entity.alias("subj"), F.lit("sameAs").alias("pred"),
-        F.concat(F.lit(GND), F.col("authority_id")).alias("obj"),
-    )
-    e_name = ents.select(
-        entity.alias("subj"), F.lit("preferredName").alias("pred"),
-        F.col("pname").alias("obj"),
-    )
-    return (
-        page_type.unionAll(page_mentions)
-        .unionAll(e_type).unionAll(e_same).unionAll(e_name)
-        .distinct()
-        .orderBy("subj", "pred", "obj")
-    )
+    # no isBasedOn; sorted because the oracle orders its rows
+    return linked_to_triples(
+        m, None, same_as=F.concat(F.lit(GND), F.col("authority_id"))
+    ).orderBy("subj", "pred", "obj")
 
 
 def crawl_pipeline_sql(expected_ldj: str) -> str:
@@ -159,7 +126,7 @@ SELECT DISTINCT subj, pred, obj FROM (
          '{TARGET}' || entity_type || '/' || authority_id FROM m
   UNION ALL
   SELECT '{TARGET}' || entity_type || '/' || authority_id,
-         '@type', CASE entity_type {_CLASS_CASE} END FROM ents
+         '@type', CASE entity_type {CLASS_CASE} END FROM ents
   UNION ALL
   SELECT '{TARGET}' || entity_type || '/' || authority_id,
          'sameAs', '{GND}' || authority_id FROM ents

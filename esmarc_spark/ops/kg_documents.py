@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from esmarc_spark.pipeline.materialize import linked_to_triples
+
 # (surface_form, entity_type, authority_id) — vocabulary-anchored
 DOC_GAZETTEER = [
     ("spark", "topics", "4055209-1"),
@@ -39,15 +41,6 @@ DOC_GAZETTEER = [
 
 TARGET = "https://data.slub-dresden.de/"
 GND = "https://d-nb.info/gnd/"
-
-_SCHEMA_CLASS = {
-    "persons": "http://schema.org/Person",
-    "organizations": "http://schema.org/Organization",
-    "geo": "http://schema.org/Place",
-    "topics": "http://schema.org/Thing",
-    "works": "http://schema.org/CreativeWork",
-    "events": "http://schema.org/Event",
-}
 
 
 def gazetteer_values_sql() -> str:
@@ -125,77 +118,27 @@ GROUP BY entity_type, authority_id
 
 
 def doc_triples(documents: DataFrame) -> DataFrame:
-    """Full (subj, pred, obj) emission over documents — the flagship.
-
-    Shapes (cf. pipeline.materialize): page @type/mentions, entity
-    @type/sameAs/preferredName (preferredName = min surface, deterministic).
-    """
-    # One partial-agg pass collapses the mention set to the distinct
-    # (doc, entity) relation, carrying the per-pair min surface so the
-    # entity aggregate derives from it WITHOUT a second pass over the
-    # mentions (min of per-doc mins == global min).  The lazy
-    # localCheckpoint materializes that small relation once for its three
-    # consumers — the round-7 shape cached the FULL mention set and
-    # re-shuffled it four times (two distincts, one groupBy, one global
-    # distinct over the union).  The outer distinct is dropped on the same
-    # disjointness argument materialize.linked_to_triples documents: every
-    # branch is internally distinct (pairs/ents come out of groupBys, the
-    # doc-id branch is an explicit distinct) and the branches cannot
-    # collide (distinct pred values; '@type' rows split by 'doc://' vs
-    # TARGET subj prefixes), so a global distinct would shuffle every
-    # triple for nothing.  The oracle keeps its SELECT DISTINCT — same
-    # result set, hash-verified.
-    pairs = (
-        doc_mentions(documents)
-        .groupBy("doc_id", "entity_type", "authority_id")
-        .agg(F.min("surface_form").alias("_s"))
-        .localCheckpoint(eager=False)
+    """Full (subj, pred, obj) emission over documents — the flagship:
+    page @type/mentions with "doc://<doc_id>" pages, entity
+    @type/sameAs/preferredName with GND sameAs, no isBasedOn.  The
+    oracle keeps its SELECT DISTINCT — same result set, hash-verified."""
+    return linked_to_triples(
+        doc_mentions(documents),
+        None,
+        page=F.concat(F.lit("doc://"), F.col("doc_id").cast("string")),
+        same_as=F.concat(F.lit(GND), F.col("authority_id")),
     )
-    page = F.concat(F.lit("doc://"), F.col("doc_id").cast("string"))
-    entity = F.concat(F.lit(TARGET), "entity_type", F.lit("/"), "authority_id")
-
-    page_type = (
-        pairs.select("doc_id").distinct()
-        .select(
-            F.concat(F.lit("doc://"), F.col("doc_id").cast("string")).alias("subj"),
-            F.lit("@type").alias("pred"),
-            F.lit("http://schema.org/CreativeWork").alias("obj"),
-        )
-    )
-    page_mentions = pairs.select(
-        page.alias("subj"), F.lit("mentions").alias("pred"), entity.alias("obj")
-    )
-    ents = pairs.groupBy("entity_type", "authority_id").agg(
-        F.min("_s").alias("pname")
-    )
-    e_id = F.concat(F.lit(TARGET), "entity_type", F.lit("/"), "authority_id")
-    schema_map = F.create_map(*[F.lit(x) for kv in _SCHEMA_CLASS.items() for x in kv])
-    # in-row fan-out: scan the tiny entity aggregate once for its three
-    # shapes instead of recomputing the groupBy per shape
-    po = F.explode(
-        F.array(
-            F.struct(
-                F.lit("@type").alias("pred"),
-                schema_map[F.col("entity_type")].alias("obj"),
-            ),
-            F.struct(
-                F.lit("sameAs").alias("pred"),
-                F.concat(F.lit(GND), F.col("authority_id")).alias("obj"),
-            ),
-            F.struct(
-                F.lit("preferredName").alias("pred"),
-                F.col("pname").alias("obj"),
-            ),
-        )
-    )
-    e_shapes = ents.select(e_id.alias("subj"), po.alias("_po")).select(
-        "subj", F.col("_po.pred").alias("pred"), F.col("_po.obj").alias("obj")
-    )
-    return page_type.unionAll(page_mentions).unionAll(e_shapes)
 
 
-_CLASS_CASE = " ".join(
-    f"WHEN '{k}' THEN '{v}'" for k, v in _SCHEMA_CLASS.items()
+# oracle text: the reference's schema.org classes as DuckDB CASE arms
+# (Spark side: materialize._schema_class_map, from mapping.spec)
+CLASS_CASE = (
+    "WHEN 'persons' THEN 'http://schema.org/Person' "
+    "WHEN 'organizations' THEN 'http://schema.org/Organization' "
+    "WHEN 'geo' THEN 'http://schema.org/Place' "
+    "WHEN 'topics' THEN 'http://schema.org/Thing' "
+    "WHEN 'works' THEN 'http://schema.org/CreativeWork' "
+    "WHEN 'events' THEN 'http://schema.org/Event'"
 )
 
 DOC_TRIPLES_SQL = f"""
@@ -213,7 +156,7 @@ SELECT DISTINCT subj, pred, obj FROM (
          '{TARGET}' || entity_type || '/' || authority_id FROM m
   UNION ALL
   SELECT '{TARGET}' || entity_type || '/' || authority_id,
-         '@type', CASE entity_type {_CLASS_CASE} END FROM ents
+         '@type', CASE entity_type {CLASS_CASE} END FROM ents
   UNION ALL
   SELECT '{TARGET}' || entity_type || '/' || authority_id,
          'sameAs', '{GND}' || authority_id FROM ents

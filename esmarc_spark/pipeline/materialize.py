@@ -3,17 +3,20 @@
 Emitted graph (reference-parity vocabulary — mentions / sameAs / @type /
 preferredName, cf. /root/reference/esmarc/esmarc.py:39-237 + id.py:40-50):
 
-  page node   subj = url
-      (url, "@type", "http://schema.org/CreativeWork")
-      (url, "mentions", <entity @id>)            one per detected mention
-      (url, "isBasedOn", <source partition uri>) provenance
+  page node   subj = page (the url, or "doc://<doc_id>" for documents)
+      (page, "@type", "http://schema.org/CreativeWork")
+      (page, "mentions", <entity @id>)            one per detected mention
+      (page, "isBasedOn", <source partition uri>) provenance (optional)
   entity node subj = minted "{TARGET_ID}{entity_type}/{authority_id}"
       (entity, "@type", schema.org class)
       (entity, "sameAs", canonical authority URI) the linking edge
       (entity, "preferredName", deterministic min surface form)
 
-All shapes are pure DataFrame expressions; the only aggregation
-(preferredName) is a min() — skew-immune partial agg.
+``linked_to_triples`` is the one batch emitter; the webtext pipeline, the
+one-job backfill, ``ops.kg_documents.doc_triples`` and
+``ops.crawl.crawl_pipeline`` are adapters over it.  All shapes are pure
+DataFrame expressions; the only aggregation (preferredName) is a min() —
+skew-immune partial agg.
 """
 
 from __future__ import annotations
@@ -22,24 +25,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from esmarc_spark.lookups.dims import TARGET_ID
+from esmarc_spark.mapping.spec import ENTITY_MAPPING
 
 TRIPLE_SCHEMA = "subj string, pred string, obj string"
-
-_SCHEMA_CLASS = {
-    "persons": "http://schema.org/Person",
-    "organizations": "http://schema.org/Organization",
-    "geo": "http://schema.org/Place",
-    "topics": "http://schema.org/Thing",
-    "works": "http://schema.org/CreativeWork",
-    "events": "http://schema.org/Event",
-    "resources": "http://schema.org/CreativeWork",
-}
 
 
 def entity_id_col() -> F.Column:
     return F.concat(
         F.lit(TARGET_ID), F.col("entity_type"), F.lit("/"), F.col("authority_id")
     )
+
+
+def is_based_on_col(source: str | F.Column, page: F.Column) -> F.Column:
+    """The provenance object "{TARGET_ID}source/<source>/<page>"; ``source``
+    is a literal source index or a column (the backfill's pday)."""
+    if isinstance(source, str):
+        return F.concat(F.lit(f"{TARGET_ID}source/{source}/"), page)
+    return F.concat(F.lit(f"{TARGET_ID}source/"), source, F.lit("/"), page)
 
 
 def _fan_out(
@@ -63,127 +65,89 @@ def _fan_out(
 
 
 def _schema_class_map() -> F.Column:
-    return F.create_map(*[F.lit(x) for kv in _SCHEMA_CLASS.items() for x in kv])
+    """entity_type -> the reference's schema.org @type (mapping.spec)."""
+    return F.create_map(
+        *[F.lit(x) for t, m in ENTITY_MAPPING.items() for x in (t, m["single:@type"])]
+    )
 
 
-def linked_to_triples(linked: DataFrame, source_index: str = "webtext") -> DataFrame:
-    """Linked mention rows -> the full triple set (union of typed shapes).
+def linked_to_triples(
+    linked: DataFrame,
+    source_index: str | F.Column | None = "webtext",
+    *,
+    page: F.Column | None = None,
+    same_as: F.Column | None = None,
+    keys: tuple[str, ...] = (),
+) -> DataFrame:
+    """Linked mention rows -> the full triple set, output (*keys, subj,
+    pred, obj).
 
-    One partial-agg pass collapses the linked mention rows to the
-    distinct (url, entity) relation — carrying the per-pair min surface
-    so the entity aggregate derives from it without a second pass (min
-    of per-url mins == global min) — and the lazy localCheckpoint
-    materializes THAT small relation once for the three consumers.  The
-    round-7 shape checkpointed the full linked set (all 7 columns, one
-    row per mention occurrence) and re-shuffled it three times: a url
-    distinct, a (url, entity) distinct, and the entity groupBy.  The
-    mention shape now needs no distinct at all (the groupBy keys are
-    exactly its output grain; canonical_url is functionally dependent on
-    (entity_type, authority_id) — the same dependency the round-4 "no
-    outer distinct" argument below already relies on).  Batch-only
-    caller — streaming builds its shapes directly in
-    streaming.stream_page_triples."""
+    ``linked`` needs entity_type, authority_id and surface_form plus
+    whatever the arguments read.  Callers differ in four things only:
+    ``page`` is the page subject (default the url column); ``same_as``
+    is the sameAs object as an expression over (entity_type,
+    authority_id) (default: the linked canonical_url column, carried
+    through both aggregates); ``source_index`` is the isBasedOn source
+    (a literal, a column such as pday, or None for no isBasedOn triple);
+    ``keys`` are the extra partition columns every aggregate is keyed
+    by.  With ``keys=("pday",)`` and ``source_index=F.col("pday")`` the
+    output is, day by day, exactly ``linked_to_triples(day,
+    source_index=day)``, as one Spark job over all days (a hot day
+    cannot collapse into one reducer any worse than a per-day loop, and
+    AQE still splits skewed (pday, entity) buckets).
+
+    One partial-agg pass collapses the mention rows to the distinct
+    (*keys, page, entity) relation, carrying the per-pair min surface so
+    the entity aggregate derives from it without a second pass over the
+    mentions (min of per-page mins == global min); the lazy
+    localCheckpoint materializes THAT small relation once for its three
+    consumers: the page distinct, the mentions shape and the entity
+    groupBy.
+
+    No distinct over the union is needed: a global distinct would
+    shuffle every triple for nothing, the single biggest avoidable
+    shuffle at 10^12 docs.  Each branch is internally distinct: pages
+    come out of a distinct, the mentions shape is the groupBy grain
+    itself, and the entity shapes come out of a groupBy (a carried
+    canonical_url is functionally dependent on (entity_type,
+    authority_id), so it adds no rows to either grain).  The branches
+    cannot collide: their predicates differ except '@type', whose page
+    rows have page subjects and whose entity rows have minted
+    ``TARGET_ID`` subjects (pages never live in that namespace).
+
+    Batch-only: append-mode streaming cannot run the groupBy without a
+    watermark, so streaming composes its page shapes statelessly."""
+    page = F.col("url") if page is None else page
+    entity = ("entity_type", "authority_id")
+    if same_as is None:
+        entity += ("canonical_url",)
+        same_as = F.col("canonical_url")
     pairs = (
-        linked.groupBy("url", "entity_type", "authority_id", "canonical_url")
+        linked.groupBy(*keys, page.alias("_page"), *entity)
         .agg(F.min("surface_form").alias("_s"))
         .localCheckpoint(eager=False)
     )
     entity_id = entity_id_col()
+    page_col = F.col("_page")
 
+    page_objs = [("@type", F.lit("http://schema.org/CreativeWork"))]
+    if source_index is not None:
+        page_objs.append(("isBasedOn", is_based_on_col(source_index, page_col)))
     page_shapes = _fan_out(
-        pairs.select("url").distinct(),
-        F.col("url"),
-        [
-            ("@type", F.lit("http://schema.org/CreativeWork")),
-            (
-                "isBasedOn",
-                F.concat(F.lit(f"{TARGET_ID}source/{source_index}/"), F.col("url")),
-            ),
-        ],
+        pairs.select(*keys, "_page").distinct(), page_col, page_objs, keys=keys
     )
     page_mentions = pairs.select(
-        F.col("url").alias("subj"),
+        *keys,
+        page_col.alias("subj"),
         F.lit("mentions").alias("pred"),
         entity_id.alias("obj"),
     )
     entity_shapes = _fan_out(
-        pairs.groupBy("entity_type", "authority_id", "canonical_url").agg(
-            F.min("_s").alias("preferred_name")
-        ),
+        pairs.groupBy(*keys, *entity).agg(F.min("_s").alias("preferred_name")),
         entity_id,
         [
             ("@type", _schema_class_map()[F.col("entity_type")]),
-            ("sameAs", F.col("canonical_url")),
-            ("preferredName", F.col("preferred_name")),
-        ],
-    )
-
-    # no outer distinct: every shape is internally distinct (pages are
-    # unique, page_mentions deduped, entity shapes come out of a groupBy)
-    # and the shapes can't collide across the union (disjoint pred/subj
-    # combinations) — a global distinct here would shuffle every triple for
-    # nothing, which at 10^12 docs is the single biggest avoidable shuffle.
-    return page_shapes.unionAll(page_mentions).unionAll(entity_shapes)
-
-
-def linked_to_triples_partitioned(linked: DataFrame) -> DataFrame:
-    """Per-day triple emission for the single-job backfill (round 5 —
-    VERDICT r4 #3): ``linked`` carries a ``pday`` column, and every
-    aggregation/distinct is additionally keyed by it, so the output is
-    byte-identical, day by day, to running ``linked_to_triples(part,
-    source_index=pday)`` once per day — but as ONE Spark job over all
-    pending days instead of a serialized driver loop. Output columns:
-    (pday, subj, pred, obj).
-
-    Scale note: pday joins every shuffle key, so a hot day cannot
-    collapse the backfill into one reducer any worse than the per-day
-    loop could — and AQE still splits skewed (pday, entity) buckets.
-
-    Same one-pass collapse as ``linked_to_triples`` (round 8): the
-    checkpoint holds the small (pday, url, entity) aggregate, not the
-    full per-occurrence linked set, and the mention shape needs no
-    distinct (the groupBy grain IS its output grain)."""
-    pairs = (
-        linked.groupBy(
-            "pday", "url", "entity_type", "authority_id", "canonical_url"
-        )
-        .agg(F.min("surface_form").alias("_s"))
-        .localCheckpoint(eager=False)
-    )
-    entity_id = entity_id_col()
-    keys = ("pday",)
-
-    page_shapes = _fan_out(
-        pairs.select("pday", "url").distinct(),
-        F.col("url"),
-        [
-            ("@type", F.lit("http://schema.org/CreativeWork")),
-            (
-                "isBasedOn",
-                F.concat(
-                    F.lit(f"{TARGET_ID}source/"),
-                    F.col("pday"),
-                    F.lit("/"),
-                    F.col("url"),
-                ),
-            ),
-        ],
-        keys=keys,
-    )
-    page_mentions = pairs.select(
-        F.col("pday"),
-        F.col("url").alias("subj"),
-        F.lit("mentions").alias("pred"),
-        entity_id.alias("obj"),
-    )
-    entity_shapes = _fan_out(
-        pairs.groupBy("pday", "entity_type", "authority_id", "canonical_url").agg(
-            F.min("_s").alias("preferred_name")
-        ),
-        entity_id,
-        [
-            ("@type", _schema_class_map()[F.col("entity_type")]),
-            ("sameAs", F.col("canonical_url")),
+            ("sameAs", same_as),
             ("preferredName", F.col("preferred_name")),
         ],
         keys=keys,

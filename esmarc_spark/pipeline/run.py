@@ -17,10 +17,7 @@ from pyspark.errors import AnalysisException
 from esmarc_spark.pipeline.canonicalize import canonical_mapping, rewrite_through_canonical
 from esmarc_spark.pipeline.extract_text import dedup_by_url, with_extracted_text
 from esmarc_spark.pipeline.link import link_mentions
-from esmarc_spark.pipeline.materialize import (
-    linked_to_triples,
-    linked_to_triples_partitioned,
-)
+from esmarc_spark.pipeline.materialize import linked_to_triples
 from esmarc_spark.pipeline.mentions import (
     detect_mentions,
     detect_mentions_ngram,
@@ -466,7 +463,7 @@ def _folded_docs_to_triples(
     linked = linked.withColumn("pday", F.substring("url", 1, 10)).withColumn(
         "url", F.expr("substring(url, 11)")
     )
-    return linked_to_triples_partitioned(linked)
+    return linked_to_triples(linked, F.col("pday"), keys=("pday",))
 
 
 def _corpus_dedup_apply(

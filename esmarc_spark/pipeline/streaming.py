@@ -20,9 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from esmarc_spark.lookups.dims import TARGET_ID
 from esmarc_spark.pipeline.extract_text import with_extracted_text
 from esmarc_spark.pipeline.link import link_mentions
+from esmarc_spark.pipeline.materialize import entity_id_col, is_based_on_col
 from esmarc_spark.pipeline.mentions import detect_mentions_ngram
 
 WEBTEXT_SCHEMA = (
@@ -62,18 +62,15 @@ def _docs_to_page_triples(
 ) -> DataFrame:
     mentions = detect_mentions_ngram(docs, gazetteer)
     linked = link_mentions(mentions, gazetteer)
-    entity_id = F.concat(
-        F.lit(TARGET_ID), F.col("entity_type"), F.lit("/"), F.col("authority_id")
-    )
     page_mentions = linked.select(
         F.col("url").alias("subj"),
         F.lit("mentions").alias("pred"),
-        entity_id.alias("obj"),
+        entity_id_col().alias("obj"),
     )
     page_prov = linked.select("url").dropDuplicates(["url"]).select(
         F.col("url").alias("subj"),
         F.lit("isBasedOn").alias("pred"),
-        F.concat(F.lit(f"{TARGET_ID}source/{source_index}/"), F.col("url")).alias("obj"),
+        is_based_on_col(source_index, F.col("url")).alias("obj"),
     )
     return page_mentions.unionByName(page_prov)
 

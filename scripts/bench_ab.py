@@ -4,8 +4,8 @@ sandbox drifts ±20% across invocations, so only paired runs separate
 code effects from drift (VERDICT r2 #10).
 
 Usage: python scripts/bench_ab.py <other_repo_dir> [sf_dir] [n_rounds]
-Writes BENCH/ab_vs_prior.json with per-query min-of-rounds for both
-checkouts and the ratio.
+Appends one run to the JSON array in BENCH/ab_vs_prior.json: per-query
+min-of-rounds for both checkouts and the ratio.
 """
 
 from __future__ import annotations
@@ -62,9 +62,11 @@ def main() -> None:
     }
     print(json.dumps(result))
     (REPO / "BENCH").mkdir(exist_ok=True)
-    (REPO / "BENCH" / "ab_vs_prior.json").write_text(
-        json.dumps(result, indent=2) + "\n"
-    )
+    out = REPO / "BENCH" / "ab_vs_prior.json"
+    runs = json.loads(out.read_text()) if out.exists() else []
+    if isinstance(runs, dict):  # a single run written before the array form
+        runs = [runs]
+    out.write_text(json.dumps(runs + [result], indent=2) + "\n")
 
 
 if __name__ == "__main__":

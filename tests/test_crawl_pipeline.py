@@ -83,3 +83,21 @@ def test_generator_roundtrip(spark, tmp_path):
         sys.modules.pop("gen_realcrawl_fixture", None)
     assert (tmp_path / "realcrawl.warc.gz").read_bytes() == want_warc
     assert (tmp_path / "realcrawl_expected.ldj").read_bytes() == want_ldj
+
+
+def test_oracle_text_pinned():
+    """The DuckDB oracle text is checked by hash elsewhere; a refactor of
+    the Spark side must not move it by a byte."""
+    import hashlib
+
+    from esmarc_spark.ops.kg_documents import DOC_TRIPLES_SQL
+
+    def sha(text):
+        return hashlib.sha256(text.encode()).hexdigest()
+
+    assert sha(DOC_TRIPLES_SQL) == (
+        "7b7d06ff94ab4a6b3e98583991deb380b08b3dac379ab4d468b00ce99f6bc217"
+    )
+    assert sha(crawl_pipeline_sql(EXPECTED)) == (
+        "11b7185b9840fcac2ec9021a350d6d2c4e10544296c6e3f75f9a1849f2851fbe"
+    )

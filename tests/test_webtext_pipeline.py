@@ -181,6 +181,51 @@ def test_triples_shapes(webtext, gazetteer):
     assert sorted(map(tuple, rows)) == sorted(map(tuple, rows2))
 
 
+def test_keyed_emission_matches_per_day(spark):
+    """One emission keyed by pday == the union over days of the per-day
+    emission, and every entity type (resources included) gets the
+    reference's schema.org @type."""
+    from esmarc_spark.mapping.spec import ENTITY_MAPPING
+
+    days = ("2024-01-01", "2024-01-02", "2024-01-03")
+    cols = "pday string, url string, surface_form string, entity_type string, " \
+        "authority_id string, canonical_url string"
+    rows = []
+    for i, day in enumerate(days):
+        for j, etype in enumerate(ENTITY_MAPPING):
+            auth = f"{j}-{i % 2}"
+            canon = f"https://d-nb.info/gnd/{auth}"
+            for k in range(2):
+                # two pages a day; the surface differs by page so the
+                # preferredName min is a per-day aggregate
+                rows.append((day, f"https://ex.org/{day}/{k}", f"s{k}{i}{etype}",
+                             etype, auth, canon))
+    linked = spark.createDataFrame(rows, cols)
+
+    keyed = linked_to_triples(linked, F.col("pday"), keys=("pday",))
+    assert keyed.columns == ["pday", "subj", "pred", "obj"]
+    got = sorted(map(tuple, keyed.collect()))
+    want = sorted(
+        (day, *r)
+        for day in days
+        for r in linked_to_triples(
+            linked.where(F.col("pday") == day).drop("pday"), source_index=day
+        ).collect()
+    )
+    assert got == want
+    assert len(set(got)) == len(got)  # no global distinct, no duplicates
+
+    types = {(s, o) for _, s, p, o in got if p == "@type"}
+    res = "https://data.slub-dresden.de/resources/"
+    assert any(s.startswith(res) and o == "http://schema.org/CreativeWork"
+               for s, o in types)
+    # every entity type gets a class (a missing map key would emit null)
+    assert all(o is not None for _, o in types)
+    assert {o for _, o in types} == {
+        m["single:@type"] for m in ENTITY_MAPPING.values()
+    }
+
+
 def test_zipf_head_present(webtext, gazetteer):
     """~30% of docs mention Germany — the skew the salted agg handles."""
     docs = dedup_by_url(with_extracted_text(webtext))
