@@ -1,8 +1,10 @@
 """Pipeline orchestration: S0 webtext -> S5 triples, batch or incremental.
 
 ``run_pipeline`` is the pure dataflow (DataFrame in, DataFrame out) — used
-by tests, bench, and __spark_entry__. ``run_incremental`` wraps it with
-checkpoint/resume + per-partition lineage (north_rule).
+by tests, bench, and __spark_entry__. ``run_incremental`` writes day
+partitions with checkpoint/resume + per-partition lineage (north_rule)
+through one write path, ``_write_days``, whose output per day equals
+``run_pipeline`` over that day.
 """
 
 from __future__ import annotations
@@ -31,29 +33,66 @@ from esmarc_spark.pipeline.checkpoint import CheckpointStore
 GOPHER_REPETITION_THRESHOLDS: tuple[float, float, float] = (0.30, 0.20, 0.18)
 
 
-def _host_authority_gate(
-    df: DataFrame,
-    host_ranks: DataFrame,
-    min_rank_scaled: int,
-    keep_unranked: bool,
+def _url_gates(
+    webtext: DataFrame,
+    group_cols: tuple[str, ...] = (),
+    *,
+    host_blocklist: DataFrame | None = None,
+    robots: DataFrame | None = None,
+    host_ranks: DataFrame | None = None,
+    min_rank_scaled: int = 0,
+    keep_unranked: bool = True,
+    drop_noindex: bool = False,
+    canonical_url_dedup: bool = False,
+    percent_normalize: bool = False,
+    rel_canonical_dedup: bool = False,
 ) -> DataFrame:
-    """Drop rows whose url host ranks below ``min_rank_scaled`` in the
-    (host, rank_scaled) dim — shared by prepare_docs (stage 1b) and the
-    batch backfill, which must run it on the UNFOLDED url (ADVICE r6 #1:
-    host_of() over a pday-folded url returns '' and the gate silently
-    no-ops / drops everything)."""
-    from esmarc_spark.ops.urlnorm import host_of
+    """``prepare_docs`` stages 1-2b, the gates that read the raw url or
+    html (see there for each). ``group_cols`` scopes the two dedup stages:
+    the day-partitioned writer passes ``("pday",)`` and runs this BEFORE
+    folding pday into the url, because host_of() over a folded
+    '2024-01-01https://...' url returns '' and would silently no-op the
+    host gates (ADVICE r6 #1)."""
+    if host_blocklist is not None:
+        from esmarc_spark.ops.urlnorm import filter_by_host_blocklist
 
-    keyed = df.withColumn("__host", host_of(F.col("url")))
-    if keep_unranked:
-        gate_side = host_ranks.where(
-            F.col("rank_scaled") < min_rank_scaled
-        ).select(F.col("host").alias("__host"))
-        return keyed.join(gate_side, "__host", "anti").drop("__host")
-    gate_side = host_ranks.where(
-        F.col("rank_scaled") >= min_rank_scaled
-    ).select(F.col("host").alias("__host"))
-    return keyed.join(gate_side, "__host", "semi").drop("__host")
+        webtext = filter_by_host_blocklist(webtext, host_blocklist)
+    if robots is not None:
+        from esmarc_spark.ops.robots import robots_gate
+
+        # key by url: the verdict is a pure function of the url, so
+        # recrawl duplicates share one verdict row and all copies of a
+        # disallowed url drop together (no unique row key needed here)
+        webtext = robots_gate(webtext, robots, key_col="url")
+    if host_ranks is not None:
+        from esmarc_spark.ops.urlnorm import host_of
+
+        below = F.col("rank_scaled") < min_rank_scaled
+        gate_side = host_ranks.where(below if keep_unranked else ~below)
+        webtext = (
+            webtext.withColumn("__host", host_of(F.col("url")))
+            .join(
+                gate_side.select(F.col("host").alias("__host")),
+                "__host",
+                "anti" if keep_unranked else "semi",
+            )
+            .drop("__host")
+        )
+    if drop_noindex:
+        from esmarc_spark.ops.pagemeta import filter_noindex
+
+        webtext = filter_noindex(webtext)
+    if canonical_url_dedup:
+        from esmarc_spark.ops.urlnorm import dedup_by_canonical_url
+
+        webtext = dedup_by_canonical_url(
+            webtext, group_cols=group_cols, percent_normalize=percent_normalize
+        )
+    if rel_canonical_dedup:
+        from esmarc_spark.ops.pagemeta import dedup_by_declared_canonical
+
+        webtext = dedup_by_declared_canonical(webtext, group_cols=group_cols)
+    return webtext
 
 
 def prepare_docs(
@@ -87,9 +126,9 @@ def prepare_docs(
 
     ``dedup_scope`` (internal, round 7): a Column over the doc row that
     scopes the CORPUS for stages 3b/3c — line/span frequencies are
-    counted per scope value instead of over the whole input. The batch
-    backfill passes the folded pday prefix so one-job counts equal the
-    per-day loop's; leave None everywhere else.
+    counted per scope value instead of over the whole input. The
+    day-partitioned writer passes the folded pday prefix so each day's
+    counts equal a run over that day alone; leave None everywhere else.
 
     Stage order (each gate only pays for rows the previous one kept):
 
@@ -150,35 +189,18 @@ def prepare_docs(
     at web scale the rank dim (~10^8 hosts) exceeds broadcast limits,
     so it plans as a one-shuffle hash join (AQE downgrades it to a
     broadcast automatically whenever the filtered rank side is small)."""
-    if host_blocklist is not None:
-        from esmarc_spark.ops.urlnorm import filter_by_host_blocklist
-
-        webtext = filter_by_host_blocklist(webtext, host_blocklist)
-    if robots is not None:
-        from esmarc_spark.ops.robots import robots_gate
-
-        # key by url: the verdict is a pure function of the url, so
-        # recrawl duplicates share one verdict row and all copies of a
-        # disallowed url drop together (no unique row key needed here)
-        webtext = robots_gate(webtext, robots, key_col="url")
-    if host_ranks is not None:
-        webtext = _host_authority_gate(
-            webtext, host_ranks, min_rank_scaled, keep_unranked
-        )
-    if drop_noindex:
-        from esmarc_spark.ops.pagemeta import filter_noindex
-
-        webtext = filter_noindex(webtext)
-    if canonical_url_dedup:
-        from esmarc_spark.ops.urlnorm import dedup_by_canonical_url
-
-        webtext = dedup_by_canonical_url(
-            webtext, percent_normalize=percent_normalize
-        )
-    if rel_canonical_dedup:
-        from esmarc_spark.ops.pagemeta import dedup_by_declared_canonical
-
-        webtext = dedup_by_declared_canonical(webtext)
+    webtext = _url_gates(
+        webtext,
+        host_blocklist=host_blocklist,
+        robots=robots,
+        host_ranks=host_ranks,
+        min_rank_scaled=min_rank_scaled,
+        keep_unranked=keep_unranked,
+        drop_noindex=drop_noindex,
+        canonical_url_dedup=canonical_url_dedup,
+        percent_normalize=percent_normalize,
+        rel_canonical_dedup=rel_canonical_dedup,
+    )
     if legacy_charsets:
         from esmarc_spark.pipeline.extract_text import extract_legacy_text
 
@@ -390,61 +412,19 @@ def run_pipeline(
 def _curated_day_docs(
     partitioned: DataFrame, days: list[str], curation: dict | None
 ) -> DataFrame:
-    """The batch-shaped curation front-end over day partitions: every
-    URL-READING gate (blocklist, host-authority rank gate, per-(pday)
-    canonical dedup) runs BEFORE the pday fold — a folded
-    '2024-01-01https://...' url would make host_of() return '' and
-    silently no-op the host gates (ADVICE r6 #1) — then the row-local
-    prepare_docs gates run over the folded frame. The corpus-scoped
-    line/span dedup stages count frequencies per pday (the folded url's
-    fixed-width prefix) so the one-job backfill stays byte-identical per
-    day to the loop path with ANY flag combination (tested)."""
-    part = partitioned.where(F.col("pday").isin(days))
+    """``prepare_docs`` over day partitions, with pday folded into the url
+    (a fixed-width 10-char prefix) so every url-keyed stage keys on
+    (pday, url). The url-reading gates run BEFORE the fold, their dedups
+    grouped per pday (``_url_gates``); the corpus-scoped line/span dedup
+    stages count frequencies per pday prefix. Each day's docs therefore
+    equal ``prepare_docs`` over that day alone with ANY flag combination
+    (tested)."""
     cur = dict(curation or {})
-    host_bl = cur.pop("host_blocklist", None)
-    robots = cur.pop("robots", None)
-    host_ranks = cur.pop("host_ranks", None)
-    min_rank_scaled = cur.pop("min_rank_scaled", 0)
-    keep_unranked = cur.pop("keep_unranked", True)
-    canon = cur.pop("canonical_url_dedup", False)
-    pct = cur.pop("percent_normalize", False)
-    noindex = cur.pop("drop_noindex", False)
-    rel_canon = cur.pop("rel_canonical_dedup", False)
-    work = part
-    if host_bl is not None:
-        from esmarc_spark.ops.urlnorm import filter_by_host_blocklist
-
-        work = filter_by_host_blocklist(work, host_bl)
-    if robots is not None:
-        # prepare_docs stage 1a, on the UNFOLDED url (url-reading gate
-        # like the blocklist — a folded url has no parseable host)
-        from esmarc_spark.ops.robots import robots_gate
-
-        work = robots_gate(work, robots, key_col="url")
-    if host_ranks is not None:
-        # prepare_docs stage 1b, on the UNFOLDED url (a pure row filter
-        # — day-independent by construction)
-        work = _host_authority_gate(
-            work, host_ranks, min_rank_scaled, keep_unranked
-        )
-    if noindex:
-        # stage 1c, html-only row filter — fold-independent, runs with
-        # the other pre-fold gates for symmetry
-        from esmarc_spark.ops.pagemeta import filter_noindex
-
-        work = filter_noindex(work)
-    if canon:
-        from esmarc_spark.ops.urlnorm import dedup_by_canonical_url
-
-        work = dedup_by_canonical_url(
-            work, group_cols=("pday",), percent_normalize=pct
-        )
-    if rel_canon:
-        # stage 2b on the UNFOLDED url (the key falls back to the raw
-        # url for undeclared pages), grouped per pday like stage 2
-        from esmarc_spark.ops.pagemeta import dedup_by_declared_canonical
-
-        work = dedup_by_declared_canonical(work, group_cols=("pday",))
+    # the url-reading gates' flags: the keyword-only parameters of _url_gates
+    gates = {k: cur.pop(k) for k in _url_gates.__kwdefaults__ if k in cur}
+    work = _url_gates(
+        partitioned.where(F.col("pday").isin(days)), ("pday",), **gates
+    )
     keyed = work.withColumn("url", F.concat(F.col("pday"), F.col("url")))
     return prepare_docs(
         keyed, dedup_scope=F.substring(F.col("url"), 1, 10), **cur
@@ -455,7 +435,10 @@ def _folded_docs_to_triples(
     docs: DataFrame, gazetteer: DataFrame, canonical_map: DataFrame | None
 ) -> DataFrame:
     """S2-S5 over folded-url docs; splits pday back out for the
-    partitioned triple emission."""
+    partitioned triple emission. The split costs one Exchange that
+    ``run_pipeline`` does not pay: the emitter's first groupBy keys on the
+    unfolded url, a new expression, so it cannot reuse dedup_by_url's
+    hash(folded url) partitioning (~0.25 s per 5k-doc day on local[4])."""
     mentions = detect_mentions_ngram(docs, gazetteer)
     linked = link_mentions(mentions, gazetteer)
     if canonical_map is not None:
@@ -524,57 +507,46 @@ def _corpus_dedup_apply(
     return surv.drop("doc_id")
 
 
-def _backfill_one_job(
+def _write_days(
     spark: SparkSession,
     store: CheckpointStore,
     partitioned: DataFrame,
     gazetteer: DataFrame,
     canonical_map: DataFrame | None,
-    pending: list[str],
+    days: list[str],
     out_root: str,
     run_id: str,
     curation: dict | None = None,
     corpus_dedup: dict | None = None,
-) -> list[str]:
-    """All pending day partitions in ONE Spark write job (round 5 —
-    VERDICT r4 #2 perf-weak item: the per-day driver loop serialized a
+) -> None:
+    """Curate, emit and write the triples of ``days`` in ONE Spark write
+    job, then record one lineage row per day — the only write path of
+    ``run_incremental``. A multi-day backfill and a one-day append are the
+    same code (round 5 — VERDICT r4 #2: a per-day driver loop serialized a
     3-year backfill into ~1100 jobs; at 100x scale the DRIVER, not the
     cluster, set the floor).
 
-    Per-day semantics are preserved exactly — the output is byte-
-    identical to the loop — by keying every url-keyed stage on
-    (pday, url): ``pday`` is a fixed-width 10-char prefix folded into
-    the url through S1-S3 (one column concat; no extra shuffle key
-    plumbing through the operators), split back out before the
-    pday-aware triple emission. Lineage rows come from two grouped
-    aggregations (input docs/watermark; written triples/mentions)
-    instead of 3 driver actions per day; ``wall_sec`` carries the whole
-    backfill's wall on each row (documented coarsening — the loop's
-    per-day timing is meaningless inside one job).
+    Per-day semantics are exact — each day's output equals
+    ``run_pipeline(day_rows, source_index=day)`` byte for byte (tested) —
+    because every url-keyed stage keys on (pday, url): ``pday`` is folded
+    into the url through S1-S3 (``_curated_day_docs``; one column concat,
+    no extra shuffle key plumbing through the operators) and split back
+    out before the pday-keyed triple emission. Lineage comes from two
+    grouped aggregations (input docs/watermark; written triples/mentions);
+    ``wall_sec`` carries the whole write's wall on each row.
 
-    Crash granularity is the whole backfill (no lineage rows are
-    recorded until the write commits), and the write is the same
-    idempotent dynamic-partition overwrite — a re-run replaces, never
-    duplicates.
+    Crash granularity is the call (no lineage row is recorded until the
+    write commits), and the write is an idempotent dynamic-partition
+    overwrite — a re-run replaces, never duplicates.
 
-    ``curation`` (round 6) carries prepare_docs flags. Row-local gates
-    (repetition, PII, charset, legacy decode) apply to the folded frame
-    unchanged — they never read the url. The two NON-row-local gates run
-    BEFORE the pday fold, because a folded "2024-01-01https://..." url
-    would defeat host parsing and url canonicalization: the host
-    blocklist is a row-level filter (day-independent by construction),
-    and canonical dedup groups per (pday, canonical_url) via
-    ``group_cols`` so the winner set is byte-identical to the per-day
-    loop."""
+    ``corpus_dedup``: the call's days form one dump (dedup_incremental's
+    survivor set does not depend on the dump sequence — tested)."""
     t0 = time.time()
-    part = partitioned.where(F.col("pday").isin(pending))
-    docs = _curated_day_docs(partitioned, pending, curation)
+    part = partitioned.where(F.col("pday").isin(days))
+    docs = _curated_day_docs(partitioned, days, curation)
     if corpus_dedup is not None:
-        # one dump for the whole backlog: the dump partitioning does not
-        # change the survivor set (dedup_incremental's equality guarantee
-        # holds for any dump sequence — tested loop vs batch)
         docs = _corpus_dedup_apply(
-            spark, partitioned, curation, corpus_dedup, "|".join(pending), docs
+            spark, partitioned, curation, corpus_dedup, "|".join(days), docs
         )
     triples = _folded_docs_to_triples(docs, gazetteer, canonical_map)
     triples.write.mode("overwrite").partitionBy("pday").parquet(
@@ -590,7 +562,7 @@ def _backfill_one_job(
         # column); the string cast happens after, for the lineage keys.
         written = spark.read.parquet(f"{out_root}/triples")
         written = (
-            written.where(F.col("pday").isin(pending))
+            written.where(F.col("pday").isin(days))
             .withColumn("pday", F.col("pday").cast("string"))
         )
         tcounts = {
@@ -605,12 +577,12 @@ def _backfill_one_job(
             .collect()
         }
     except AnalysisException as exc:
-        # ONLY the empty-path shape (zero-mention backfill: nothing has
-        # ever been written under triples/) maps to zero counts. Any
-        # other failure — corrupt footer, transient store error — must
-        # propagate: swallowing it would record status='done' with
-        # n_triples=0 for every pending day, corrupting lineage while
-        # marking the partitions complete.
+        # ONLY the empty-path shape (no day has emitted a triple yet:
+        # nothing has ever been written under triples/) maps to zero
+        # counts. Any other failure — corrupt footer, transient store
+        # error — must propagate: swallowing it would record
+        # status='done' with n_triples=0 for every day, corrupting
+        # lineage while marking the partitions complete.
         msg = str(exc)
         if not (
             "PATH_NOT_FOUND" in msg
@@ -638,10 +610,9 @@ def _backfill_one_job(
                 "n_triples": tcounts[pday]["n_triples"] if pday in tcounts else 0,
                 "wall_sec": wall,
             }
-            for pday in pending
+            for pday in days
         ]
     )
-    return list(pending)
 
 
 def run_incremental(
@@ -651,36 +622,33 @@ def run_incremental(
     out_root: str,
     same_as_edges: DataFrame | None = None,
     fail_after_partitions: int | None = None,
-    mode: str = "auto",
     curation: dict | None = None,
     corpus_dedup: dict | None = None,
 ) -> dict:
-    """Checkpoint-resumable run over days(warc_ts) partitions.
+    """Checkpoint-resumable run over days(warc_ts) partitions: every
+    pending day is written by ONE ``_write_days`` job — a multi-day
+    backlog and the steady-state one-day append alike — and each day's
+    triples equal ``run_pipeline`` over that day (tested).
 
-    mode="auto" (default): a multi-day backlog is written as ONE
-    dynamic-partition-overwrite job (``_backfill_one_job``); a single
-    pending day — the steady-state incremental tail — and injected-
-    failure test runs use the per-day loop. "loop"/"batch" force a path.
+    ``fail_after_partitions`` is the kill/rerun test's crash hook: when
+    set, the days are written one job each and the run raises before
+    the n-th. Returns a lineage summary dict.
 
-    ``fail_after_partitions`` injects a crash for the kill/rerun test
-    (implies the loop path — the injection point is between partitions).
-    Returns a lineage summary dict.
-
-    ``curation`` (round 6) forwards prepare_docs flags — the loop path
-    hands them to ``run_pipeline`` verbatim; the batch path applies the
-    same gates with per-day grouping (see ``_backfill_one_job``), so
-    both paths stay byte-identical with any flag combination (tested).
+    ``curation`` (round 6) forwards prepare_docs flags; the url-reading
+    gates group per day (see ``_curated_day_docs``), so per-day output is
+    byte-identical to ``run_pipeline(day_rows, **curation)`` with any
+    flag combination (tested).
 
     ``corpus_dedup`` (round 6 — the hook VERDICT r5 #2 asked for) wires
-    ops.dedup_incremental into the production run: each new day (loop:
-    one dump per day; batch: one dump for the backlog) is near-dup
-    deduped against the PERSISTED corpus signature state before
-    mentions, so a recrawl or syndicated copy of an already-ingested
-    page emits no triples. Keys: ``state_root`` (fsio-capable URI,
-    required) plus optional dedup_incremental_dump tuning
-    (threshold/num_hashes/bands/shingle_k/max_bucket_size). The final
-    survivor set equals from-scratch dedup_corpus over the whole curated
-    corpus regardless of the dump partitioning, so loop and batch stay
+    ops.dedup_incremental into the production run: each write's days
+    (one dump per call) are near-dup deduped against the PERSISTED
+    corpus signature state before mentions, so a recrawl or syndicated
+    copy of an already-ingested page emits no triples. Keys:
+    ``state_root`` (fsio-capable URI, required) plus optional
+    dedup_incremental_dump tuning (threshold/num_hashes/bands/shingle_k/
+    max_bucket_size). The final survivor set equals from-scratch
+    dedup_corpus over the whole curated corpus regardless of the dump
+    partitioning, so a backfill and successive daily appends stay
     byte-identical (tested). Keep the curation flags constant for the
     lifetime of one state_root.
     """
@@ -700,72 +668,20 @@ def run_incremental(
     done = {r["pday"] for r in store.completed_partitions().collect()}
     pending = sorted(set(all_days) - done)
 
-    use_batch = mode == "batch" or (
-        mode == "auto" and fail_after_partitions is None and len(pending) > 1
-    )
-    if use_batch:
-        processed = _backfill_one_job(
-            spark, store, partitioned, gazetteer, canonical_map,
-            pending, out_root, run_id, curation, corpus_dedup,
-        )
-        return {
-            "run_id": run_id,
-            "processed": processed,
-            "skipped_done": sorted(done & set(all_days)),
-            "out": f"{out_root}/triples",
-        }
-
-    processed = []
-    for n, pday in enumerate(pending):
+    if fail_after_partitions is None:
+        writes = [pending] if pending else []
+    else:
+        writes = [[pday] for pday in pending]
+    for n, days in enumerate(writes):
         if fail_after_partitions is not None and n >= fail_after_partitions:
-            raise RuntimeError(f"injected failure before partition {pday}")
-        t0 = time.time()
-        part = partitioned.where(F.col("pday") == pday)
-        if corpus_dedup is not None:
-            # the folded-url composition (byte-identical to run_pipeline
-            # per day — tested), so the dump's doc identity matches the
-            # batch path and the persisted state
-            docs = _curated_day_docs(partitioned, [pday], curation)
-            docs = _corpus_dedup_apply(
-                spark, partitioned, curation, corpus_dedup, pday, docs
-            )
-            triples = _folded_docs_to_triples(docs, gazetteer, canonical_map)
-        else:
-            triples = run_pipeline(
-                part, gazetteer, canonical_map=canonical_map, source_index=pday,
-                **(curation or {}),
-            ).withColumn("pday", F.lit(pday))
-        triples.write.mode("overwrite").partitionBy("pday").parquet(
-            f"{out_root}/triples"
+            raise RuntimeError(f"injected failure before partition {days[0]}")
+        _write_days(
+            spark, store, partitioned, gazetteer, canonical_map,
+            days, out_root, run_id, curation, corpus_dedup,
         )
-        written = spark.read.parquet(f"{out_root}/triples").where(
-            F.col("pday") == pday
-        )
-        counts = written.agg(
-            F.count("*").alias("n_triples"),
-            F.count(F.when(F.col("pred") == "mentions", 1)).alias("n_mentions"),
-        ).collect()[0]
-        metrics = part.agg(
-            F.count("*").alias("n_docs"), F.max("warc_ts").alias("wm")
-        ).collect()[0]
-        store.record(
-            [
-                {
-                    "pday": pday,
-                    "status": "done",
-                    "watermark_ts": metrics["wm"],
-                    "run_id": run_id,
-                    "n_docs": metrics["n_docs"],
-                    "n_mentions": counts["n_mentions"],
-                    "n_triples": counts["n_triples"],
-                    "wall_sec": time.time() - t0,
-                }
-            ]
-        )
-        processed.append(pday)
     return {
         "run_id": run_id,
-        "processed": processed,
+        "processed": pending,
         "skipped_done": sorted(done & set(all_days)),
         "out": f"{out_root}/triples",
     }

@@ -1,18 +1,19 @@
 """Kill/rerun resumability: an interrupted incremental run, resumed, must
 produce byte-identical output to one uninterrupted run — no duplicates —
-and per-partition lineage rows must exist (north_rule)."""
+and per-partition lineage rows must exist (north_rule). Every day
+run_incremental writes must equal run_pipeline over that day alone."""
 
 import pytest
+from pyspark.sql import functions as F
 
-from esmarc_spark.pipeline.run import run_incremental
+from esmarc_spark.pipeline.checkpoint import CheckpointStore
+from esmarc_spark.pipeline.run import run_incremental, run_pipeline
 from esmarc_spark.pipeline.webtext import gazetteer_df, synth_webtext
 
 
 @pytest.fixture()
 def inputs(spark):
     # 3 distinct warc_ts days
-    from pyspark.sql import functions as F
-
     wt = synth_webtext(spark, n_docs=120, partitions=4, dup_fraction=0).withColumn(
         "warc_ts",
         F.timestamp_seconds(
@@ -24,9 +25,52 @@ def inputs(spark):
 
 def _read_triples(spark, root):
     return {
-        (r.subj, r.pred, r.obj, r.pday)
+        (r.subj, r.pred, r.obj, str(r.pday))
         for r in spark.read.parquet(f"{root}/triples").collect()
     }
+
+
+def _pday():
+    return F.date_format("warc_ts", "yyyy-MM-dd")
+
+
+def _days(webtext):
+    return sorted(r.d for r in webtext.select(_pday().alias("d")).distinct().collect())
+
+
+def _lineage_counts(spark, root):
+    return {
+        r.pday: (r.n_docs, r.n_mentions, r.n_triples)
+        for r in CheckpointStore(spark, root).lineage().collect()
+    }
+
+
+def _per_day_reference(webtext, gaz, **curation):
+    """run_pipeline over each day's rows alone: the triples (keyed by day
+    like the partitioned output) and the (n_docs, n_mentions, n_triples)
+    lineage each day must record."""
+    triples, counts = set(), {}
+    for day in _days(webtext):
+        rows = webtext.where(_pday() == day)
+        out = run_pipeline(rows, gaz, source_index=day, **curation).collect()
+        triples |= {(r.subj, r.pred, r.obj, day) for r in out}
+        counts[day] = (
+            rows.count(),
+            sum(r.pred == "mentions" for r in out),
+            len(out),
+        )
+    return triples, counts
+
+
+def _append_daily(spark, webtext, gaz, root, **kw):
+    """Successive run_incremental calls, each exposing one more day (the
+    daily-append shape); every call must process exactly its new day."""
+    for day in _days(webtext):
+        res = run_incremental(
+            spark, webtext.where(_pday() <= day), gaz, root, **kw
+        )
+        assert res["processed"] == [day]
+    return _read_triples(spark, root)
 
 
 def test_kill_and_resume(spark, tmp_path, inputs):
@@ -51,41 +95,55 @@ def test_kill_and_resume(spark, tmp_path, inputs):
 
 def test_backfill_one_job_matches_loop(spark, tmp_path, inputs):
     """Round 5 (VERDICT r4 #3): the single-job backfill must be byte-
-    identical, day by day, to the per-day loop — same triples under the
-    same pday partitions, same lineage counts — while recording all
-    pending days from one write job."""
-    from esmarc_spark.pipeline.checkpoint import CheckpointStore
-
+    identical, day by day, to run_pipeline over each day — same triples
+    under the same pday partitions, lineage counts equal to the input's
+    and the reference's — while recording all pending days from one write
+    job. Successive one-day appends equal the one backfill."""
     webtext, gaz = inputs
-    loop_root = str(tmp_path / "loop")
+    ref, ref_counts = _per_day_reference(webtext, gaz)
     batch_root = str(tmp_path / "batch")
-    run_incremental(spark, webtext, gaz, loop_root, mode="loop")
-    summary = run_incremental(spark, webtext, gaz, batch_root, mode="batch")
+    summary = run_incremental(spark, webtext, gaz, batch_root)
     assert len(summary["processed"]) == 3
-    assert _read_triples(spark, batch_root) == _read_triples(spark, loop_root)
-
-    def lineage_counts(root):
-        return {
-            r.pday: (r.n_docs, r.n_mentions, r.n_triples)
-            for r in CheckpointStore(spark, root).lineage().collect()
-        }
-
-    assert lineage_counts(batch_root) == lineage_counts(loop_root)
+    assert _read_triples(spark, batch_root) == ref
+    assert _lineage_counts(spark, batch_root) == ref_counts
     # one write job: every batch lineage row carries the same wall stamp
     walls = {r.wall_sec for r in CheckpointStore(spark, batch_root).lineage().collect()}
     assert len(walls) == 1
 
+    daily_root = str(tmp_path / "daily")
+    assert _append_daily(spark, webtext, gaz, daily_root) == ref
+    assert _lineage_counts(spark, daily_root) == ref_counts
+
     # idempotent tail: nothing pending, nothing changes
     again = run_incremental(spark, webtext, gaz, batch_root)
     assert again["processed"] == []
-    assert _read_triples(spark, batch_root) == _read_triples(spark, loop_root)
+    assert _read_triples(spark, batch_root) == ref
+
+
+def test_zero_triple_day_records_lineage(spark, tmp_path):
+    """A fresh out_root whose only pending day mentions no surface form:
+    nothing is ever written under triples/, yet the day is recorded done
+    with zero counts (the read-back must not fail on the empty path)."""
+    wt = (
+        synth_webtext(spark, n_docs=6, partitions=2, dup_fraction=0)
+        .withColumn("html", F.lit(None).cast("binary"))
+        .withColumn("text", F.lit("qwzx vbnm plkj nothing to link here."))
+        .withColumn("warc_ts", F.timestamp_seconds(F.lit(1700000000)))
+    )
+    gaz = gazetteer_df(spark)
+    root = str(tmp_path / "empty_day")
+    res = run_incremental(spark, wt, gaz, root)
+    assert res["processed"] == _days(wt)
+    (row,) = CheckpointStore(spark, root).lineage().collect()
+    assert row.status == "done"
+    assert (row.n_docs, row.n_mentions, row.n_triples) == (6, 0, 0)
+    # resume: the empty day is complete, nothing is re-run
+    assert run_incremental(spark, wt, gaz, root)["processed"] == []
 
 
 def test_lineage_metrics(spark, tmp_path, inputs):
     webtext, gaz = inputs
     root = str(tmp_path / "lineage")
-    from esmarc_spark.pipeline.checkpoint import CheckpointStore
-
     run_incremental(spark, webtext, gaz, root)
     lineage = CheckpointStore(spark, root).lineage().collect()
     assert len(lineage) == 3  # one row per day partition
@@ -124,19 +182,15 @@ def test_backfill_corrupt_readback_raises_not_done(spark, tmp_path, inputs):
     root = str(tmp_path / "corrupt")
     # first run writes triples; then corrupt every footer and force a
     # backfill of a "new" day so the read-back executes again
-    run_incremental(spark, webtext, gaz, root, mode="batch")
+    run_incremental(spark, webtext, gaz, root)
     for f in pathlib.Path(root, "triples").rglob("*.parquet"):
         f.write_bytes(b"not a parquet file")
-    from pyspark.sql import functions as F
-
     more = webtext.withColumn(
         "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 10 DAYS")
     )
     with pytest.raises(Exception):
-        run_incremental(spark, more, gaz, root, mode="batch")
+        run_incremental(spark, more, gaz, root)
     # the lineage store must NOT have recorded the new days as done
-    from esmarc_spark.pipeline.checkpoint import CheckpointStore
-
     done = sorted(
         r.pday
         for r in CheckpointStore(spark, root).completed_partitions().collect()
@@ -145,15 +199,13 @@ def test_backfill_corrupt_readback_raises_not_done(spark, tmp_path, inputs):
 
 
 def test_backfill_matches_loop_with_curation(spark, tmp_path):
-    """Round 6/7: loop and single-job backfill must stay byte-identical
-    with the curation gates ON — the batch path re-groups canonical
-    dedup per (pday,), runs blocklist AND the host-authority gate
-    pre-fold (ADVICE r6 #1: the gate on a folded url silently no-ops),
-    and scopes line/span dedup frequencies per pday (ADVICE r6 #2: a
-    line shared only ACROSS days must survive in batch mode exactly as
-    it does in the per-day loop)."""
-    from pyspark.sql import functions as F
-
+    """Round 6/7: the single-job backfill must stay byte-identical to
+    per-day run_pipeline with the curation gates ON — the write path
+    re-groups canonical dedup per (pday,), runs blocklist AND the
+    host-authority gate pre-fold (ADVICE r6 #1: the gate on a folded url
+    silently no-ops), and scopes line/span dedup frequencies per pday
+    (ADVICE r6 #2: a line shared only ACROSS days must survive in the
+    backfill exactly as it does in a one-day run)."""
     from esmarc_spark.pipeline.run import GOPHER_REPETITION_THRESHOLDS
 
     base = synth_webtext(spark, n_docs=150, partitions=4, dup_fraction=0).withColumn(
@@ -311,28 +363,28 @@ def test_backfill_matches_loop_with_curation(spark, tmp_path):
         pii_scrub=True,
     )
 
-    loop_root = str(tmp_path / "loop")
+    ref, ref_counts = _per_day_reference(wt, gaz, **curation)
     batch_root = str(tmp_path / "batch")
-    run_incremental(spark, wt, gaz, loop_root, mode="loop", curation=curation)
-    run_incremental(spark, wt, gaz, batch_root, mode="batch", curation=curation)
-    loop_triples = _read_triples(spark, loop_root)
-    assert _read_triples(spark, batch_root) == loop_triples
-    assert loop_triples and not any(
-        "spam.example" in subj for subj, _, _, _ in loop_triples
+    run_incremental(spark, wt, gaz, batch_root, curation=curation)
+    triples = _read_triples(spark, batch_root)
+    assert triples == ref
+    assert _lineage_counts(spark, batch_root) == ref_counts
+    assert triples and not any(
+        "spam.example" in subj for subj, _, _, _ in triples
     )
-    # the host-authority gate actually fired in BOTH modes
-    assert not any("lowrank.example" in subj for subj, _, _, _ in loop_triples)
+    # the host-authority gate actually fired
+    assert not any("lowrank.example" in subj for subj, _, _, _ in triples)
     # round 7: noindex pages dropped; print views collapsed onto their
     # declared canonical (the 1s-younger original wins max_by)
-    assert not any("noindexed.example" in subj for subj, _, _, _ in loop_triples)
-    assert not any("/print" in subj for subj, _, _, _ in loop_triples)
-    # round 7: robots stage 1a fired in both modes — disallowed paths
-    # gone, the allowed path on the same host untouched
+    assert not any("noindexed.example" in subj for subj, _, _, _ in triples)
+    assert not any("/print" in subj for subj, _, _, _ in triples)
+    # round 7: robots stage 1a fired — disallowed paths gone, the
+    # allowed path on the same host untouched
     assert not any(
-        "robotic.example/private" in subj for subj, _, _, _ in loop_triples
+        "robotic.example/private" in subj for subj, _, _, _ in triples
     )
     assert any(
-        "robotic.example/open" in subj for subj, _, _, _ in loop_triples
+        "robotic.example/open" in subj for subj, _, _, _ in triples
     )
 
 
@@ -340,15 +392,13 @@ def _corpus_dedup_inputs(spark):
     """3 days of webtext where day 1 re-ingests copies of day 0's pages
     under '-copy' urls (recrawl/syndication) — the corpus-dedup hook
     must drop every copy while day 0's originals keep their triples."""
-    from pyspark.sql import functions as F
-
     base = synth_webtext(spark, n_docs=90, partitions=3, dup_fraction=0).withColumn(
         "_i", F.regexp_extract("url", r"([0-9]+)$", 1).cast("int")
     )
     # text-carrying rows only, each with a 12-token unique tail: the
     # synthetic filler pool is small enough that ORGANIC cross-day
     # near-dups appear otherwise — the hook would (correctly) drop them
-    # and break the loop==plain-originals equality this test pins
+    # and break the daily==plain-originals equality this test pins
     tail = F.concat_ws(
         " ",
         F.transform(
@@ -376,8 +426,9 @@ def _corpus_dedup_inputs(spark):
 
 def test_run_incremental_corpus_dedup(spark, tmp_path):
     """Round 6 (VERDICT r5 #2 hook): run_incremental(corpus_dedup=...)
-    dedups each new day against the persisted signature state; loop and
-    batch stay identical; a crash+resume changes nothing."""
+    dedups each new day against the persisted signature state; daily
+    appends (one dump per day) and one backfill (one dump) stay
+    identical; a crash+resume changes nothing."""
     wt = _corpus_dedup_inputs(spark)
     gaz = gazetteer_df(spark)
 
@@ -388,27 +439,27 @@ def test_run_incremental_corpus_dedup(spark, tmp_path):
         )
         return _read_triples(spark, root)
 
-    loop = run(str(tmp_path / "loop"), str(tmp_path / "s_loop"), mode="loop")
-    batch = run(str(tmp_path / "batch"), str(tmp_path / "s_batch"), mode="batch")
-    assert loop == batch
+    daily = _append_daily(
+        spark, wt, gaz, str(tmp_path / "daily"),
+        corpus_dedup={"state_root": str(tmp_path / "s_daily")},
+    )
+    batch = run(str(tmp_path / "batch"), str(tmp_path / "s_batch"))
+    assert daily == batch
 
     # every '-copy' page is a near-dup of an already-ingested original:
     # no copy may emit triples (without the hook they all do)
-    assert loop and not any("-copy" in s for s, _, _, _ in loop)
+    assert daily and not any("-copy" in s for s, _, _, _ in daily)
     plain_root = str(tmp_path / "plain")
-    run_incremental(spark, wt, gaz, plain_root, mode="loop")
+    run_incremental(spark, wt, gaz, plain_root)
     assert any("-copy" in s for s, _, _, _ in _read_triples(spark, plain_root))
     # ingesting duplicates with the hook ≡ never ingesting them: the
     # deduped run equals a run over an input that never had the copies
     # (subj triples AND the per-day entity triples they alone supported)
-    from pyspark.sql import functions as F
-
     nocopy_root = str(tmp_path / "nocopy")
     run_incremental(
         spark, wt.where(~F.col("url").contains("-copy")), gaz, nocopy_root,
-        mode="loop",
     )
-    assert loop == _read_triples(spark, nocopy_root)
+    assert daily == _read_triples(spark, nocopy_root)
 
     # crash after day 0, resume: committed dump replays read-only,
     # result identical to the uninterrupted run
@@ -420,4 +471,4 @@ def test_run_incremental_corpus_dedup(spark, tmp_path):
             corpus_dedup={"state_root": crash_state},
         )
     resumed = run(crash_root, crash_state)
-    assert resumed == loop
+    assert resumed == daily
