@@ -13,6 +13,7 @@ or sequential array folds) and rounded at the boundary.
 from __future__ import annotations
 
 import sys
+import weakref
 from collections.abc import Callable
 from pathlib import Path
 
@@ -26,26 +27,24 @@ if str(_REPO) not in sys.path:
 # Memoized lazy readers, keyed per session: `spark.read.parquet` costs
 # ~140 ms of single-threaded driver work (file listing + footer/schema
 # read) PER CALL, and one bench pass issues ~20 reads over the same ten
-# tables. The cache holds only the unexecuted DataFrame handle — a plan,
-# never data — so every query still computes from the parquet inputs.
-_T_READERS: dict[tuple, DataFrame] = {}
+# tables. The cache holds only the unexecuted plan handle — never data —
+# so every query still computes from the parquet inputs. It is weakly
+# keyed by the session and stores the JVM Dataset, not the Python
+# DataFrame, whose reference back to its session would keep the key
+# alive: a stopped session's entry goes with the session.
+_T_READERS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # keyed by the session OBJECT (held strongly, so a recycled id can
-    # never resolve to a stale handle from a garbage-collected session);
-    # bounded so a long-lived multi-session harness cannot grow it
-    key = (spark, sf_dir, name)
+    path = f"{sf_dir}/{name}.parquet"
     try:
-        df = _T_READERS.get(key)
-    except TypeError:  # unhashable session subclass
-        return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if df is None:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        _T_READERS[key] = df
-        while len(_T_READERS) > 64:
-            _T_READERS.pop(next(iter(_T_READERS)))
-    return df
+        readers = _T_READERS.setdefault(spark, {})
+    except TypeError:  # session subclass without weakref support
+        return spark.read.parquet(path)
+    jdf = readers.get(path)
+    if jdf is None:
+        jdf = readers[path] = spark.read.parquet(path)._jdf
+    return DataFrame(jdf, spark)
 
 
 # Round-8 measured NON-win, recorded so it is not retried: a

@@ -36,6 +36,7 @@ from esmarc_spark.ops.kg_documents import (
     gazetteer_values_sql,
 )
 from esmarc_spark.pipeline.materialize import linked_to_triples
+from esmarc_spark.pipeline.sqltext import sql_lit
 
 ALLOWED_LANGS = ("en", "de")
 MIN_TOKENS = 8
@@ -70,7 +71,7 @@ def crawl_pipeline(spark: SparkSession, warc_path: str) -> DataFrame:
     ).join(F.broadcast(gaz), "surface_form")
     # no isBasedOn; sorted because the oracle orders its rows
     return linked_to_triples(
-        m, None, same_as=F.concat(F.lit(GND), F.col("authority_id"))
+        m, None, same_as=f"concat({sql_lit(GND)}, authority_id)"
     ).orderBy("subj", "pred", "obj")
 
 

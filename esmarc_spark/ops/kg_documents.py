@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from esmarc_spark.pipeline.materialize import linked_to_triples
+from esmarc_spark.pipeline.sqltext import sql_lit
 
 # (surface_form, entity_type, authority_id) — vocabulary-anchored
 DOC_GAZETTEER = [
@@ -125,13 +126,13 @@ def doc_triples(documents: DataFrame) -> DataFrame:
     return linked_to_triples(
         doc_mentions(documents),
         None,
-        page=F.concat(F.lit("doc://"), F.col("doc_id").cast("string")),
-        same_as=F.concat(F.lit(GND), F.col("authority_id")),
+        page="concat('doc://', CAST(doc_id AS STRING))",
+        same_as=f"concat({sql_lit(GND)}, authority_id)",
     )
 
 
 # oracle text: the reference's schema.org classes as DuckDB CASE arms
-# (Spark side: materialize._schema_class_map, from mapping.spec)
+# (Spark side: materialize._CLASS_MAP_SQL, from mapping.spec)
 CLASS_CASE = (
     "WHEN 'persons' THEN 'http://schema.org/Person' "
     "WHEN 'organizations' THEN 'http://schema.org/Organization' "

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from esmarc_spark.pipeline.sqltext import sql_ident
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """Connect every strictly-larger neighbor of u to u's min neighborhood."""
@@ -138,8 +140,9 @@ def rewrite_through_canonical(
     picks broadcast when the dim is actually small at runtime and falls back
     to a shuffle join (with skew splitting) when it isn't."""
     m = mapping.withColumnRenamed("uri", column)
+    q = sql_ident(column)
     return (
         df.join(m, column, "left")
-        .withColumn(column, F.coalesce("canonical_uri", column))
+        .withColumn(column, F.expr(f"coalesce(canonical_uri, {q})"))
         .drop("canonical_uri")
     )

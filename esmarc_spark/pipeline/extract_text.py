@@ -20,7 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
-from pyspark.sql.window import Window
+
+from esmarc_spark.pipeline.sqltext import sql_ident, sql_lit
 
 _SCRIPT_RE = re.compile(r"(?is)<(script|style|head)\b.*?</\1>")
 _TAG_RE = re.compile(r"(?s)<[^>]*>")
@@ -52,18 +53,28 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
     return s
 
 
-def _strip_expr(s: F.Column) -> F.Column:
+def _strip_sql(s: str) -> str:
     """The deterministic tag-strip + entity decode + whitespace collapse
-    over an already-decoded STRING column."""
-    s = F.regexp_replace(s, r"(?is)<(script|style|head)\b.*?</\1>", " ")
-    s = F.regexp_replace(s, r"(?s)<[^>]*>", " ")
+    over already-decoded STRING SQL text ``s`` (the pandas reference's
+    regexes; ``(?U)`` makes Java's \\s as unicode-aware as Python's)."""
+    s = f"regexp_replace({s}, {sql_lit(_SCRIPT_RE.pattern)}, ' ')"
+    s = f"regexp_replace({s}, {sql_lit(_TAG_RE.pattern)}, ' ')"
     for ent, ch in _ENTITIES.items():
-        s = F.replace(s, F.lit(ent), F.lit(ch))
-    s = F.regexp_replace(s, r"(?U)\s+", " ")
-    return F.trim(s)
+        s = f"replace({s}, {sql_lit(ent)}, {sql_lit(ch)})"
+    s = f"regexp_replace({s}, {sql_lit('(?U)' + _WS_RE.pattern)}, ' ')"
+    return f"trim({s})"
 
 
-def extract_text_expr(html: F.Column) -> F.Column:
+def _utf8_sql(html: str) -> str:
+    """Binary html -> string, each invalid UTF-8 sequence -> U+FFFD."""
+    return f"make_valid_utf8(CAST({html} AS STRING))"
+
+
+# rows S1 fills: no text, but html to extract it from
+_NEEDS_TEXT_SQL = "text IS NULL AND html IS NOT NULL"
+
+
+def extract_text_expr(html: str) -> F.Column:
     """Pure-JVM html->text: the same deterministic strip as the pandas UDF,
     as a regexp_replace chain inside whole-stage codegen — NO Python in the
     hot path (input_hint). ``(?U)`` makes Java's \\s unicode-aware to match
@@ -76,8 +87,9 @@ def extract_text_expr(html: F.Column) -> F.Column:
     bytes unvalidated and ``make_valid_utf8`` replaces each invalid
     sequence with U+FFFD — verified byte-identical to Python's
     ``errors="replace"`` incl. truncated multi-byte sequences
-    (tests/test_webtext_pipeline.py::test_extract_non_utf8_lossy)."""
-    return _strip_expr(F.make_valid_utf8(html.cast("string")))
+    (tests/test_webtext_pipeline.py::test_extract_non_utf8_lossy).
+    ``html`` is the binary column's SQL text."""
+    return F.expr(_strip_sql(_utf8_sql(html)))
 
 
 # --- charset-aware decode (round 5 — VERDICT r4 #6) -------------------------
@@ -111,30 +123,34 @@ _CP1252_TO = bytes(_CP1252_DEFINED).decode("cp1252")
 _META_CHARSET_RE = r"""(?i)<meta[^>]*charset\s*=\s*["']?\s*([A-Za-z0-9_\-]+)"""
 
 
-def charset_sniff_expr(html: F.Column, charset_col: F.Column | None = None) -> F.Column:
+def _in_sql(values) -> str:
+    return "IN (" + ", ".join(sql_lit(v) for v in values) + ")"
+
+
+def charset_sniff_sql(html: str, charset_col: str | None = None) -> str:
     """Best-effort charset for a page: the HTTP header's token when the
     reader captured one (``read_warc(with_charset=True)``), else the
     html meta tag within the first 4096 chars (HTML5 prescan), else
-    null."""
-    meta = F.lower(
-        F.regexp_extract(
-            F.substring(html.cast("string"), 1, 4096), _META_CHARSET_RE, 1
-        )
+    null. Arguments and result are SQL text."""
+    meta = (
+        f"lower(regexp_extract(substring(CAST({html} AS STRING), 1, 4096), "
+        f"{sql_lit(_META_CHARSET_RE)}, 1))"
     )
-    sniff = F.nullif(meta, F.lit(""))
+    sniff = f"nullif({meta}, '')"
     if charset_col is not None:
-        sniff = F.coalesce(F.nullif(F.lower(charset_col), F.lit("")), sniff)
+        sniff = f"coalesce(nullif(lower({charset_col}), ''), {sniff})"
     return sniff
 
 
-def decode_html_expr(html: F.Column, charset: F.Column) -> F.Column:
+def decode_html_sql(html: str, charset: str) -> str:
     """html bytes -> string under the sniffed charset (table above);
     unknown/absent charsets take the byte-identical UTF-8 default."""
-    latin1 = F.decode(html, "ISO-8859-1")
+    latin1 = f"decode({html}, 'ISO-8859-1')"
+    cp1252 = f"translate({latin1}, {sql_lit(_CP1252_FROM)}, {sql_lit(_CP1252_TO)})"
     return (
-        F.when(charset.isin(*_CP1252_ALIASES), F.translate(latin1, _CP1252_FROM, _CP1252_TO))
-        .when(charset.isin(*_LATIN1_ALIASES), latin1)
-        .otherwise(F.make_valid_utf8(html.cast("string")))
+        f"CASE WHEN {charset} {_in_sql(_CP1252_ALIASES)} THEN {cp1252} "
+        f"WHEN {charset} {_in_sql(_LATIN1_ALIASES)} THEN {latin1} "
+        f"ELSE {_utf8_sql(html)} END"
     )
 
 
@@ -189,15 +205,12 @@ def extract_legacy_text(
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    charset_col = (
-        F.col("charset") if "charset" in webtext.columns else None
-    )
-    sniffed = charset_sniff_expr(F.col("html"), charset_col)
-    # null sniff -> null isin -> null mask; coalesce so every row lands
+    charset_col = "charset" if "charset" in webtext.columns else None
+    sniffed = charset_sniff_sql("html", charset_col)
+    # null sniff -> null IN -> null mask; coalesce so every row lands
     # in exactly one branch of the split
-    mask = F.coalesce(
-        F.col("html").isNotNull() & sniffed.isin(*sorted(charsets)),
-        F.lit(False),
+    mask = F.expr(
+        f"coalesce(html IS NOT NULL AND {sniffed} {_in_sql(sorted(charsets))}, false)"
     )
 
     @pandas_udf(StringType())
@@ -214,15 +227,17 @@ def extract_legacy_text(
             [one(b, c) for b, c in zip(html, charset)], dtype="object"
         )
 
-    decoded = dec(F.col("html"), sniffed)
     if main_content:
         from esmarc_spark.ops.boilerplate import extract_main_text
 
-        extractor = extract_main_text(decoded)
+        extractor = extract_main_text(F.col("__decoded"))
     else:
-        extractor = _strip_expr(decoded)
-    legacy = webtext.where(mask).withColumn(
-        "text", F.coalesce(F.col("text"), extractor)
+        extractor = F.expr(_strip_sql("__decoded"))
+    legacy = (
+        webtext.where(mask)
+        .withColumn("__decoded", dec(F.col("html"), F.expr(sniffed)))
+        .withColumn("text", F.coalesce(F.col("text"), extractor))
+        .drop("__decoded")
     )
     return webtext.where(~mask).unionByName(legacy)
 
@@ -248,29 +263,36 @@ def with_extracted_text(
     replacement-mangling them: the charset comes from the reader's
     ``charset`` column when present (read_warc with_charset=True), else
     an HTML5-prescan meta sniff; Latin-1 and CP1252 decode exactly
-    (decode_html_expr's table), everything else keeps the UTF-8 default.
+    (decode_html_sql's table), everything else keeps the UTF-8 default.
     Pure codegen either way — still no Python on the hot path.
     """
     if charset_aware:
-        charset = charset_sniff_expr(
-            F.col("html"),
-            F.col("charset") if "charset" in webtext.columns else None,
+        charset = charset_sniff_sql(
+            "html", "charset" if "charset" in webtext.columns else None
         )
-        decoded = decode_html_expr(F.col("html"), charset)
+        decoded = decode_html_sql("html", charset)
     else:
-        decoded = F.make_valid_utf8(F.col("html").cast("string"))
+        decoded = _utf8_sql("html")
     if main_content:
         from esmarc_spark.ops.boilerplate import extract_main_text
 
-        extractor = extract_main_text(decoded)
+        extractor = extract_main_text(F.expr(decoded))
     elif jvm:
-        extractor = _strip_expr(decoded)
+        extractor = F.expr(_strip_sql(decoded))
     else:
         extractor = extract_text_udf(F.col("html"))
-    extracted = F.when(F.col("text").isNull() & F.col("html").isNotNull(), extractor)
+    extracted = F.when(F.expr(_NEEDS_TEXT_SQL), extractor)
     return webtext.withColumn(
-        "text_extracted", F.col("text").isNull() & F.col("html").isNotNull()
+        "text_extracted", F.expr(_NEEDS_TEXT_SQL)
     ).withColumn("text", F.coalesce(F.col("text"), extracted))
+
+
+# maximize (warc_ts, has_text, ~hash) == orderBy(ts desc, null last, hash
+# asc); bitwise NOT is the overflow-safe monotone negation
+_DEDUP_RANK_SQL = (
+    "struct(warc_ts, CAST(text IS NOT NULL AS INT), "
+    "~coalesce(xxhash64(text), 0), ~coalesce(xxhash64(html), 0))"
+)
 
 
 def dedup_by_url(webtext: DataFrame) -> DataFrame:
@@ -286,16 +308,8 @@ def dedup_by_url(webtext: DataFrame) -> DataFrame:
     any partitioning (dropDuplicates would keep an arbitrary first row and
     break the byte-identity contract).
     """
-    cols = webtext.columns
-    # maximize (warc_ts, has_text, ~hash) == orderBy(ts desc, null last,
-    # hash asc); bitwise NOT is the overflow-safe monotone negation
-    rank = F.struct(
-        F.col("warc_ts"),
-        F.col("text").isNotNull().cast("int"),
-        F.bitwise_not(F.coalesce(F.xxhash64("text"), F.lit(0))),
-        F.bitwise_not(F.coalesce(F.xxhash64("html"), F.lit(0))),
-    )
+    cols = [sql_ident(c) for c in webtext.columns if c != "url"]
     picked = webtext.groupBy("url").agg(
-        F.max_by(F.struct(*[c for c in cols if c != "url"]), rank).alias("_row")
+        F.expr(f"max_by(struct({', '.join(cols)}), {_DEDUP_RANK_SQL}) AS _row")
     )
-    return picked.select("url", *[F.col(f"_row.{c}").alias(c) for c in cols if c != "url"])
+    return picked.selectExpr("url", *[f"_row.{c} AS {c}" for c in cols])

@@ -25,7 +25,7 @@ def link_mentions(mentions: DataFrame, gazetteer: DataFrame) -> DataFrame:
     Ambiguous surface forms (several candidate authority ids) fan out into
     one linked row per candidate — downstream consumers decide policy.
     """
-    return mentions.join(F.broadcast(gazetteer), "surface_form", "inner").select(
+    return mentions.join(F.broadcast(gazetteer), "surface_form", "inner").selectExpr(
         "url",
         "surface_form",
         "position",

@@ -15,8 +15,8 @@ preferredName, cf. /root/reference/esmarc/esmarc.py:39-237 + id.py:40-50):
 ``linked_to_triples`` is the one batch emitter; the webtext pipeline, the
 one-job backfill, ``ops.kg_documents.doc_triples`` and
 ``ops.crawl.crawl_pipeline`` are adapters over it.  All shapes are pure
-DataFrame expressions; the only aggregation (preferredName) is a min() —
-skew-immune partial agg.
+DataFrame expressions, rendered as Spark SQL text (``sqltext``); the only
+aggregation (preferredName) is a min() — skew-immune partial agg.
 """
 
 from __future__ import annotations
@@ -26,83 +26,80 @@ from pyspark.sql import functions as F
 
 from esmarc_spark.lookups.dims import TARGET_ID
 from esmarc_spark.mapping.spec import ENTITY_MAPPING
+from esmarc_spark.pipeline.sqltext import sql_lit
 
 TRIPLE_SCHEMA = "subj string, pred string, obj string"
 
-
-def entity_id_col() -> F.Column:
-    return F.concat(
-        F.lit(TARGET_ID), F.col("entity_type"), F.lit("/"), F.col("authority_id")
+# SQL text over a linked row, rendered once: the minted entity @id and
+# entity_type -> the reference's schema.org @type (mapping.spec)
+ENTITY_ID_SQL = f"concat({sql_lit(TARGET_ID)}, entity_type, '/', authority_id)"
+_CLASS_MAP_SQL = "map({})".format(
+    ", ".join(
+        sql_lit(x) for t, m in ENTITY_MAPPING.items() for x in (t, m["single:@type"])
     )
+)
 
 
-def is_based_on_col(source: str | F.Column, page: F.Column) -> F.Column:
-    """The provenance object "{TARGET_ID}source/<source>/<page>"; ``source``
-    is a literal source index or a column (the backfill's pday)."""
-    if isinstance(source, str):
-        return F.concat(F.lit(f"{TARGET_ID}source/{source}/"), page)
-    return F.concat(F.lit(f"{TARGET_ID}source/"), source, F.lit("/"), page)
+def is_based_on_sql(source: str, page: str) -> str:
+    """The provenance object "{TARGET_ID}source/<source>/<page>"; both
+    arguments are SQL text (a quoted literal or a column such as pday)."""
+    return f"concat({sql_lit(TARGET_ID + 'source/')}, {source}, '/', {page})"
 
 
 def _fan_out(
-    rel: DataFrame, subj: F.Column, shapes: list[tuple], keys: tuple = ()
+    rel: DataFrame, subj: str, shapes: list[tuple[str, str]], keys: tuple = ()
 ) -> DataFrame:
     """Scan an aggregated relation ONCE and fan its triple shapes out via
     an in-row explode — per-shape selects would re-run the distinct /
     groupBy shuffle once per shape (measured: 6 scans + 5 shuffles for
     the same triple set). ``keys`` rides extra partition columns through."""
-    po = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(pred).alias("pred"), obj.alias("obj"))
-                for pred, obj in shapes
-            ]
-        )
+    po = ", ".join(
+        f"named_struct('pred', {sql_lit(pred)}, 'obj', {obj})" for pred, obj in shapes
     )
-    return rel.select(*keys, subj.alias("subj"), po.alias("_po")).select(
-        *keys, "subj", F.col("_po.pred").alias("pred"), F.col("_po.obj").alias("obj")
-    )
-
-
-def _schema_class_map() -> F.Column:
-    """entity_type -> the reference's schema.org @type (mapping.spec)."""
-    return F.create_map(
-        *[F.lit(x) for t, m in ENTITY_MAPPING.items() for x in (t, m["single:@type"])]
-    )
+    return rel.selectExpr(
+        *keys, f"{subj} AS subj", f"explode(array({po})) AS _po"
+    ).selectExpr(*keys, "subj", "_po.pred AS pred", "_po.obj AS obj")
 
 
 def linked_to_triples(
     linked: DataFrame,
-    source_index: str | F.Column | None = "webtext",
+    source_index: str | None = sql_lit("webtext"),
     *,
-    page: F.Column | None = None,
-    same_as: F.Column | None = None,
+    page: str = "url",
+    same_as: str | None = None,
     keys: tuple[str, ...] = (),
 ) -> DataFrame:
     """Linked mention rows -> the full triple set, output (*keys, subj,
     pred, obj).
 
     ``linked`` needs entity_type, authority_id and surface_form plus
-    whatever the arguments read.  Callers differ in four things only:
-    ``page`` is the page subject (default the url column); ``same_as``
-    is the sameAs object as an expression over (entity_type,
-    authority_id) (default: the linked canonical_url column, carried
-    through both aggregates); ``source_index`` is the isBasedOn source
-    (a literal, a column such as pday, or None for no isBasedOn triple);
-    ``keys`` are the extra partition columns every aggregate is keyed
-    by.  With ``keys=("pday",)`` and ``source_index=F.col("pday")`` the
-    output is, day by day, exactly ``linked_to_triples(day,
-    source_index=day)``, as one Spark job over all days (a hot day
-    cannot collapse into one reducer any worse than a per-day loop, and
-    AQE still splits skewed (pday, entity) buckets).
+    whatever the arguments read.  Callers differ in four things only,
+    the first three given as SQL text over a linked row: ``page`` is the
+    page subject (default the url column); ``same_as`` is the sameAs
+    object as an expression over (entity_type, authority_id) (default:
+    the linked canonical_url column, carried through both aggregates);
+    ``source_index`` is the isBasedOn source (a quoted literal — see
+    ``sqltext.sql_lit`` — a column such as pday, or None for no
+    isBasedOn triple); ``keys`` are the extra partition columns every
+    aggregate is keyed by.  With ``keys=("pday",)`` and
+    ``source_index="pday"`` the output is, day by day, exactly
+    ``linked_to_triples(day, source_index=sql_lit(day))``, as one Spark
+    job over all days (a hot day cannot collapse into one reducer any
+    worse than a per-day loop, and AQE still splits skewed (pday,
+    entity) buckets).
 
     One partial-agg pass collapses the mention rows to the distinct
     (*keys, page, entity) relation, carrying the per-pair min surface so
     the entity aggregate derives from it without a second pass over the
-    mentions (min of per-page mins == global min); the lazy
-    localCheckpoint materializes THAT small relation once for its three
-    consumers: the page distinct, the mentions shape and the entity
-    groupBy.
+    mentions (min of per-page mins == global min); a localCheckpoint
+    materializes THAT small relation once for its three consumers: the
+    page distinct, the mentions shape and the entity groupBy.  The
+    checkpoint is not lazy in effect: under AQE,
+    ``localCheckpoint(eager=False)`` plans the relation adaptively, which
+    runs every upstream shuffle-map and broadcast stage (extraction
+    dedup, the mention scan, the link and canonical joins) inside this
+    call — three Spark jobs for ``run_pipeline`` — and leaves only the
+    final aggregate and the triple shapes to the caller's action.
 
     No distinct over the union is needed: a global distinct would
     shuffle every triple for nothing, the single biggest avoidable
@@ -117,38 +114,31 @@ def linked_to_triples(
 
     Batch-only: append-mode streaming cannot run the groupBy without a
     watermark, so streaming composes its page shapes statelessly."""
-    page = F.col("url") if page is None else page
     entity = ("entity_type", "authority_id")
     if same_as is None:
         entity += ("canonical_url",)
-        same_as = F.col("canonical_url")
+        same_as = "canonical_url"
     pairs = (
-        linked.groupBy(*keys, page.alias("_page"), *entity)
-        .agg(F.min("surface_form").alias("_s"))
+        linked.groupBy(*keys, F.expr(f"{page} AS _page"), *entity)
+        .agg(F.expr("min(surface_form) AS _s"))
         .localCheckpoint(eager=False)
     )
-    entity_id = entity_id_col()
-    page_col = F.col("_page")
-
-    page_objs = [("@type", F.lit("http://schema.org/CreativeWork"))]
+    page_objs = [("@type", sql_lit("http://schema.org/CreativeWork"))]
     if source_index is not None:
-        page_objs.append(("isBasedOn", is_based_on_col(source_index, page_col)))
+        page_objs.append(("isBasedOn", is_based_on_sql(source_index, "_page")))
     page_shapes = _fan_out(
-        pairs.select(*keys, "_page").distinct(), page_col, page_objs, keys=keys
+        pairs.selectExpr(*keys, "_page").distinct(), "_page", page_objs, keys=keys
     )
-    page_mentions = pairs.select(
-        *keys,
-        page_col.alias("subj"),
-        F.lit("mentions").alias("pred"),
-        entity_id.alias("obj"),
+    page_mentions = pairs.selectExpr(
+        *keys, "_page AS subj", "'mentions' AS pred", f"{ENTITY_ID_SQL} AS obj"
     )
     entity_shapes = _fan_out(
-        pairs.groupBy(*keys, *entity).agg(F.min("_s").alias("preferred_name")),
-        entity_id,
+        pairs.groupBy(*keys, *entity).agg(F.expr("min(_s) AS preferred_name")),
+        ENTITY_ID_SQL,
         [
-            ("@type", _schema_class_map()[F.col("entity_type")]),
+            ("@type", f"{_CLASS_MAP_SQL}[entity_type]"),
             ("sameAs", same_as),
-            ("preferredName", F.col("preferred_name")),
+            ("preferredName", "preferred_name"),
         ],
         keys=keys,
     )

@@ -23,12 +23,16 @@ Both return one row per mention occurrence:
 
 from __future__ import annotations
 
+import functools
 import re
+import weakref
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from esmarc_spark.pipeline.sqltext import sql_lit
 
 MENTIONS_SCHEMA = "url string, surface_form string, position long, lang string"
 
@@ -114,37 +118,57 @@ def detect_mentions(webtext: DataFrame, surface_forms: list[str]) -> DataFrame:
     )
 
 
+# [^\p{L}\p{N}_] instead of \W: Java's \W is ASCII-only, which silently
+# strips edge umlauts/accents ("Österreich" -> "sterreich") and breaks
+# Unicode surface forms; \p{L}/\p{N} are Unicode-aware in both Java regex
+# and RE2, keeping the JVM path aligned with the Python regex detector
+# (whose \w IS Unicode-aware)
+_NW = r"[^\p{L}\p{N}_]+"
+_EDGES = sql_lit(f"(^{_NW}|{_NW}$)")
+# the document's tokens, edge punctuation stripped from the text and from
+# every token
+_TOKS_SQL = (
+    f"transform(split(regexp_replace(text, {_EDGES}, ''), ' '), "
+    f"t -> regexp_replace(t, {_EDGES}, ''))"
+)
+
+
 def _tokens_base(webtext: DataFrame, extra_cols: tuple[str, ...]) -> DataFrame:
-    # [^\p{L}\p{N}_] instead of \W: Java's \W is ASCII-only, which silently
-    # strips edge umlauts/accents ("Österreich" -> "sterreich") and breaks
-    # Unicode surface forms; \p{L}/\p{N} are Unicode-aware in both Java
-    # regex and RE2, keeping the JVM path aligned with the Python regex
-    # detector (whose \w IS Unicode-aware)
-    _nw = r"[^\p{L}\p{N}_]+"
-    toks = F.split(F.regexp_replace(F.col("text"), f"(^{_nw}|{_nw}$)", ""), " ")
-    clean = F.transform(toks, lambda t: F.regexp_replace(t, f"(^{_nw}|{_nw}$)", ""))
-    return webtext.where(F.col("text").isNotNull()).select(
-        "url", "lang", *extra_cols, clean.alias("_toks")
+    return webtext.where("text IS NOT NULL").selectExpr(
+        "url", "lang", *extra_cols, f"{_TOKS_SQL} AS _toks"
     )
 
 
-def _positions(anchor_tokens: list[str] | None = None) -> F.Column:
-    """1-based candidate start positions over _toks; with ``anchor_tokens``
-    only positions whose token can START a surface form survive (the cheap
-    per-token test that avoids building n-gram strings at every position)."""
-    arr = F.col("_toks")
-    size = F.size(arr)
-    pos = F.when(size >= 1, F.sequence(F.lit(1), size)).otherwise(
-        F.array().cast("array<int>")
+# the token at 1-based position i
+_TOK_AT_I = "element_at(_toks, i)"
+
+
+def _positions(anchor_test: str | None = None) -> str:
+    """1-based candidate start positions over _toks; with ``anchor_test``
+    (SQL text over the token ``_TOK_AT_I``) only positions whose token
+    can START a surface form survive (the cheap per-token test that
+    avoids building n-gram strings at every position)."""
+    pos = (
+        "CASE WHEN size(_toks) >= 1 THEN sequence(1, size(_toks)) "
+        "ELSE CAST(array() AS array<int>) END"
     )
-    if anchor_tokens is not None:
-        pos = F.filter(pos, lambda i: F.element_at(arr, i).isin(*anchor_tokens))
+    if anchor_test is not None:
+        pos = f"filter({pos}, i -> {anchor_test})"
     return pos
 
 
 BLOOM_COL = "_anchor_bloom"
 _BLOOM_WORD_BITS = 62  # bits packed per long; top 2 bits unused so every
 #                        word and every 2^k divisor stays positive
+# 2^0 .. 2^62 — a 63-element literal array, the variable-offset bit
+# test's stand-in for shiftright (whose shift amount must be a constant)
+_POW2_SQL = "array({})".format(
+    ", ".join(str(1 << k) for k in range(_BLOOM_WORD_BITS + 1))
+)
+
+
+def _bloom_slot(m_bits: int, token: str) -> str:
+    return f"(xxhash64({token}) & {m_bits - 1})"
 
 
 def _bloom_build(surf_df: DataFrame, n_tok0: int) -> tuple[DataFrame, int]:
@@ -166,21 +190,19 @@ def _bloom_build(surf_df: DataFrame, n_tok0: int) -> tuple[DataFrame, int]:
     # cap keeps h int-addressable; past ~45M distinct first tokens the
     # false-positive rate degrades gracefully instead of overflowing
     m_bits = 1 << min(30, max(13, (24 * max(n_tok0, 1) - 1).bit_length()))
-    tok0 = F.split("surface_form", " ")[0]
+    b = _bloom_slot(m_bits, "split(surface_form, ' ')[0]")
     # packed words folded JVM-side (bit_or partial-aggregates map-side,
     # and is idempotent so no distinct pass is needed): the driver
     # collects at most m_bits/62 longs regardless of gazetteer
     # cardinality — round 3 collected one row per SET BIT instead
-    b = F.xxhash64(tok0).bitwiseAND(F.lit(m_bits - 1))
     word_rows = (
-        surf_df.select(
-            (b / _BLOOM_WORD_BITS).cast("int").alias("w"),
-            F.element_at(
-                _pow2(), F.pmod(b, F.lit(_BLOOM_WORD_BITS)).cast("int") + 1
-            ).alias("bit"),
+        surf_df.selectExpr(
+            f"CAST({b} / {_BLOOM_WORD_BITS} AS INT) AS w",
+            f"element_at({_POW2_SQL}, CAST(pmod({b}, {_BLOOM_WORD_BITS}) AS INT) + 1)"
+            " AS bit",
         )
         .groupBy("w")
-        .agg(F.bit_or("bit").alias("word"))
+        .agg(F.expr("bit_or(bit) AS word"))
         .collect()
     )
     words = [0] * ((m_bits + _BLOOM_WORD_BITS - 1) // _BLOOM_WORD_BITS)
@@ -192,137 +214,119 @@ def _bloom_build(surf_df: DataFrame, n_tok0: int) -> tuple[DataFrame, int]:
     return bloom_df, m_bits
 
 
-def _pow2() -> F.Column:
-    """2^0 .. 2^62 — a 63-element literal array, the variable-offset bit
-    test's stand-in for shiftright (whose shift amount must be a Python
-    int). Built lazily: Column construction needs an active context."""
-    return F.array(*[F.lit(1 << k) for k in range(_BLOOM_WORD_BITS + 1)])
-
-
-def _bloom_test(m_bits: int, token: F.Column) -> F.Column:
-    """Row-local Bloom membership against the broadcast ``BLOOM_COL``
-    array: xxhash64 -> word via O(1) element_at -> bit via exact integer
-    pmod against a tiny power-of-two lookup. Pure JVM expressions — no
-    Python, no per-probe join, no shuffle, no gazetteer strings (or big
-    literals) in the plan."""
-    p2 = _pow2()
-    h = F.xxhash64(token).bitwiseAND(F.lit(m_bits - 1))
-    word = F.element_at(
-        F.col(BLOOM_COL), (h / _BLOOM_WORD_BITS).cast("int") + 1
-    )
-    off = F.pmod(h, F.lit(_BLOOM_WORD_BITS)).cast("int")
-    return F.pmod(word, F.element_at(p2, off + 2)) >= F.element_at(
-        p2, off + 1
+def _bloom_test(m_bits: int, token: str) -> str:
+    """Row-local Bloom membership of SQL text ``token`` against the
+    broadcast ``BLOOM_COL`` array: xxhash64 -> word via O(1) element_at ->
+    bit via exact integer pmod against a tiny power-of-two lookup. Pure
+    JVM expressions — no Python, no per-probe join, no shuffle, no
+    gazetteer strings (or big literals) in the plan."""
+    h = _bloom_slot(m_bits, token)
+    word = f"element_at({BLOOM_COL}, CAST({h} / {_BLOOM_WORD_BITS} AS INT) + 1)"
+    off = f"CAST(pmod({h}, {_BLOOM_WORD_BITS}) AS INT)"
+    return (
+        f"pmod({word}, element_at({_POW2_SQL}, {off} + 2)) "
+        f">= element_at({_POW2_SQL}, {off} + 1)"
     )
 
 
-def _gram_structs(lengths: list[int], positions: F.Column) -> F.Column:
+def _gram_structs(lengths: list[int], positions: str) -> str:
     """Array of (position, n_toks, surface_form) structs — one candidate
     n-gram per start position per gazetteer length, nulls filtered."""
-    arr = F.col("_toks")
-    size = F.size(arr)
 
-    def gram_at(i, n: int) -> F.Column:
-        gram = F.concat_ws(
-            " ", *[F.element_at(arr, (i + j).cast("int")) for j in range(n)]
+    def gram_at(n: int) -> str:
+        gram = ", ".join(
+            f"element_at(_toks, CAST(i + {j} AS INT))" for j in range(n)
         )
-        return F.when(
-            size - (i - 1) >= n,
-            F.struct(
-                (i - 1).cast("long").alias("position"),
-                F.lit(n).alias("n_toks"),
-                gram.alias("surface_form"),
-            ),
+        return (
+            f"CASE WHEN size(_toks) - (i - 1) >= {n} THEN named_struct("
+            f"'position', CAST(i - 1 AS BIGINT), 'n_toks', {n}, "
+            f"'surface_form', concat_ws(' ', {gram})) END"
         )
 
-    grams = F.flatten(
-        F.transform(positions, lambda i: F.array(*[gram_at(i, n) for n in lengths]))
+    grams = ", ".join(gram_at(n) for n in lengths)
+    return (
+        f"filter(flatten(transform({positions}, i -> array({grams}))), "
+        "g -> g IS NOT NULL)"
     )
-    return F.filter(grams, lambda g: g.isNotNull())
 
 
-def _fold_leftmost_longest(candidates: F.Column) -> F.Column:
+# the fold's comparator and accumulator, rendered once
+_ORDER_SQL = (
+    "(a, b) -> CASE WHEN a.position < b.position THEN -1 "
+    "WHEN a.position > b.position THEN 1 "
+    "WHEN a.n_toks > b.n_toks THEN -1 "
+    "WHEN a.n_toks < b.n_toks THEN 1 ELSE 0 END"
+)
+_FOLD_START_SQL = (
+    "named_struct('consumed', CAST(-1 AS BIGINT), 'kept', CAST(array() AS "
+    "array<struct<position:bigint,n_toks:int,surface_form:string>>))"
+)
+_FOLD_STEP_SQL = (
+    "(acc, g) -> CASE WHEN g.position >= acc.consumed THEN named_struct("
+    "'consumed', CAST(g.position + g.n_toks AS BIGINT), "
+    "'kept', concat(acc.kept, array(g))) ELSE acc END"
+)
+
+
+def _fold_leftmost_longest(candidates: str) -> str:
     """Strict leftmost-longest (regex finditer) semantics over a candidate
     array: sort by (position asc, length desc) — a total order, (position,
     n_toks) is unique per doc — then fold with a consumed-until cursor; a
     match is kept iff it starts at or after the end of the previously kept
     match. All later-start overlapping matches are dropped."""
-    ordered = F.array_sort(
-        candidates,
-        lambda a, b: F.when(a.position < b.position, F.lit(-1))
-        .when(a.position > b.position, F.lit(1))
-        .when(a.n_toks > b.n_toks, F.lit(-1))
-        .when(a.n_toks < b.n_toks, F.lit(1))
-        .otherwise(F.lit(0)),
-    )
-    empty_kept = F.array().cast(
-        "array<struct<position:bigint,n_toks:int,surface_form:string>>"
-    )
-    return F.aggregate(
-        ordered,
-        F.struct(F.lit(-1).cast("long").alias("consumed"), empty_kept.alias("kept")),
-        lambda acc, g: F.when(
-            g.position >= acc.consumed,
-            F.struct(
-                (g.position + g.n_toks).cast("long").alias("consumed"),
-                F.concat(acc.kept, F.array(g)).alias("kept"),
-            ),
-        ).otherwise(acc),
-        lambda acc: acc.kept,
+    return (
+        f"aggregate(array_sort({candidates}, {_ORDER_SQL}), {_FOLD_START_SQL}, "
+        f"{_FOLD_STEP_SQL}, acc -> acc.kept)"
     )
 
 
-# --- driver-side plan-construction caches (round 8) -------------------------
+# exploded fold structs -> the mention row
+_MENTION_COLS = (
+    "url", "g.surface_form AS surface_form", "g.position AS position", "lang"
+)
+
+
+# --- plan-construction memos (round 8) -------------------------------------
 #
 # Profiling the webtext pipeline showed ~0.45s of its per-call BUILD time
 # going to (a) the gazetteer strategy probe — `surf_df.head(...)`, a small
-# Spark job per call — and (b) re-constructing the inline candidate/fold
-# Column trees (hundreds of sequential py4j round trips). Both are pure
-# functions of the gazetteer CONTENT, so repeated calls over the same
-# gazetteer (the bench loop, the per-day incremental loop, streaming
-# micro-batches) can reuse them. Nothing here caches DATA of the corpus —
-# only the dim probe result and unresolved expression trees.
-#
-# The probe cache is keyed by the gazetteer DataFrame OBJECT (held
-# strongly, so an id can never be recycled into a stale hit); the Column
-# cache is keyed by the probed surface set itself.
+# Spark job per call — and (b) rendering the inline candidate/fold
+# expression. Both are pure functions of the gazetteer CONTENT, so
+# repeated calls over the same gazetteer (the bench loop, the incremental
+# appends, streaming micro-batches) can reuse them. Nothing here caches
+# DATA of the corpus, and nothing holds a JVM object or pins a session:
+# the probe memo is weakly keyed by the gazetteer DataFrame (its entry
+# goes when the frame does), and the fold memo holds SQL text.
 
-_GAZ_PROBE_CACHE: dict = {}
-_FOLD_COL_CACHE: dict = {}
+_GAZ_PROBE_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
-def _probe_gazetteer(surf_df: DataFrame, gazetteer: DataFrame, limit: int):
+def _surfaces(gazetteer: DataFrame) -> DataFrame:
+    return gazetteer.select("surface_form").distinct()
+
+
+def _probe_gazetteer(gazetteer: DataFrame, limit: int):
     """head(limit) over the distinct surfaces, memoized per gazetteer
     DataFrame object + limit."""
     try:
-        key = (gazetteer, limit)
-        hit = _GAZ_PROBE_CACHE.get(key)
-        if hit is None:
-            hit = surf_df.head(limit)
-            _GAZ_PROBE_CACHE[key] = hit
-            while len(_GAZ_PROBE_CACHE) > 16:
-                _GAZ_PROBE_CACHE.pop(next(iter(_GAZ_PROBE_CACHE)))
-        return hit
-    except TypeError:  # unhashable DataFrame subclass: probe uncached
-        return surf_df.head(limit)
+        by_limit = _GAZ_PROBE_CACHE.setdefault(gazetteer, {})
+    except TypeError:  # DataFrame subclass without weakref support
+        return _surfaces(gazetteer).head(limit)
+    if limit not in by_limit:
+        by_limit[limit] = _surfaces(gazetteer).head(limit)
+    return by_limit[limit]
 
 
-def _inline_folded_column(surface_key: tuple, lengths_key: tuple) -> F.Column:
-    """The inline path's anchor->grams->membership->fold Column, memoized
-    by (surface set, lengths) — an unresolved expression tree over the
-    `_toks` column, safely reusable across DataFrames and sessions."""
-    hit = _FOLD_COL_CACHE.get((surface_key, lengths_key))
-    if hit is None:
-        anchor_tokens = sorted({sf.split(" ")[0] for sf in surface_key})
-        grams = _gram_structs(list(lengths_key), _positions(anchor_tokens))
-        candidates = F.filter(
-            grams, lambda g: g.surface_form.isin(*surface_key)
-        )
-        hit = _fold_leftmost_longest(candidates)
-        _FOLD_COL_CACHE[(surface_key, lengths_key)] = hit
-        while len(_FOLD_COL_CACHE) > 16:
-            _FOLD_COL_CACHE.pop(next(iter(_FOLD_COL_CACHE)))
-    return hit
+@functools.lru_cache(maxsize=16)
+def _inline_fold_sql(surface_key: tuple, lengths_key: tuple) -> str:
+    """The inline path's anchor->grams->membership->fold expression over
+    the `_toks` column, as SQL text memoized by (surface set, lengths)."""
+    anchors = sorted({sf.split(" ")[0] for sf in surface_key})
+    in_anchors = f"{_TOK_AT_I} IN ({', '.join(sql_lit(a) for a in anchors)})"
+    grams = _gram_structs(list(lengths_key), _positions(in_anchors))
+    in_surfaces = ", ".join(sql_lit(sf) for sf in surface_key)
+    candidates = f"filter({grams}, g -> g.surface_form IN ({in_surfaces}))"
+    return _fold_leftmost_longest(candidates)
 
 
 def detect_mentions_ngram(
@@ -362,7 +366,6 @@ def detect_mentions_ngram(
 
     position = token index of the first token of the match.
     """
-    surf_df = gazetteer.select("surface_form").distinct()
     # ONE action probes the gazetteer: up to threshold+1 rows decide the
     # strategy AND give the inline path its surface set (streaming always
     # inlines, so it collects everything)
@@ -373,7 +376,7 @@ def detect_mentions_ngram(
         # refuse instead of silently reintroducing it; the foreachBatch
         # runner (pipeline.streaming.run_page_triples_foreach_batch) runs
         # the Bloom+broadcast-join batch path per micro-batch
-        head = _probe_gazetteer(surf_df, gazetteer, max_inline_surfaces + 1)
+        head = _probe_gazetteer(gazetteer, max_inline_surfaces + 1)
         if len(head) > max_inline_surfaces:
             raise ValueError(
                 "streaming input with a gazetteer larger than "
@@ -384,7 +387,7 @@ def detect_mentions_ngram(
             )
         use_inline = True
     else:
-        head = _probe_gazetteer(surf_df, gazetteer, max_inline_surfaces + 1)
+        head = _probe_gazetteer(gazetteer, max_inline_surfaces + 1)
         use_inline = len(head) <= max_inline_surfaces
 
     if use_inline:
@@ -393,15 +396,13 @@ def detect_mentions_ngram(
     else:
         # one small agg collects the distinct token-count SET (a handful
         # of ints) plus the first-token cardinality that sizes the bloom
+        surf_df = _surfaces(gazetteer)
         row = (
-            surf_df.select(
-                F.size(F.split("surface_form", " ")).alias("n"),
-                F.split("surface_form", " ")[0].alias("t0"),
+            surf_df.selectExpr(
+                "size(split(surface_form, ' ')) AS n",
+                "split(surface_form, ' ')[0] AS t0",
             )
-            .agg(
-                F.collect_set("n").alias("ns"),
-                F.count_distinct("t0").alias("n0"),
-            )
+            .agg(F.expr("collect_set(n) AS ns"), F.expr("count(DISTINCT t0) AS n0"))
             .collect()[0]
         )
         lengths = sorted(row["ns"])
@@ -412,27 +413,21 @@ def detect_mentions_ngram(
         # empty gazetteer -> empty mentions with a stable schema, derived
         # from the INPUT frame so a streaming caller gets a streaming frame
         # (a createDataFrame([]) here would break the downstream writeStream)
-        return webtext.where(F.lit(False)).select(
-            F.col("url"),
-            F.lit(None).cast("string").alias("surface_form"),
-            F.lit(None).cast("long").alias("position"),
-            F.col("lang"),
+        return webtext.where("false").selectExpr(
+            "url",
+            "CAST(NULL AS STRING) AS surface_form",
+            "CAST(NULL AS BIGINT) AS position",
+            "lang",
             *extra_cols,
         )
 
     base = _tokens_base(webtext, extra_cols)
 
     if use_inline:
-        folded = _inline_folded_column(tuple(surface_set), tuple(lengths))
-        return base.select(
-            "url", "lang", *extra_cols, F.explode(folded).alias("g")
-        ).select(
-            "url",
-            F.col("g.surface_form").alias("surface_form"),
-            F.col("g.position").alias("position"),
-            "lang",
-            *extra_cols,
-        )
+        folded = _inline_fold_sql(tuple(surface_set), tuple(lengths))
+        return base.selectExpr(
+            "url", "lang", *extra_cols, f"explode({folded}) AS g"
+        ).selectExpr(*_MENTION_COLS, *extra_cols)
 
     pos = _positions()
     if anchor_prefilter:
@@ -441,20 +436,16 @@ def detect_mentions_ngram(
         # Bloom never build a gram
         bloom_df, m_bits = _bloom_build(surf_df, n_tok0)
         base = base.crossJoin(F.broadcast(bloom_df))
-        arr = F.col("_toks")
-        pos = F.filter(
-            pos, lambda i: _bloom_test(m_bits, F.element_at(arr, i))
-        )
-    grams = _gram_structs(lengths, pos)
-    candidates = base.select(
-        "url", "lang", *extra_cols, F.explode(grams).alias("g")
-    ).select(
-        F.col("g.surface_form").alias("surface_form"),
+        pos = _positions(_bloom_test(m_bits, _TOK_AT_I))
+    candidates = base.selectExpr(
+        "url", "lang", *extra_cols, f"explode({_gram_structs(lengths, pos)}) AS g"
+    ).selectExpr(
+        "g.surface_form AS surface_form",
         "url",
         "lang",
         *extra_cols,
-        F.col("g.position").alias("position"),
-        F.col("g.n_toks").alias("n_toks"),
+        "g.position AS position",
+        "g.n_toks AS n_toks",
     )
     # broadcast hash join = the gazetteer membership test; never shuffles
     # the candidate (fact) side and inlines nothing into the plan
@@ -463,18 +454,11 @@ def detect_mentions_ngram(
     # collect_list order is nondeterministic, but the fold sorts first with
     # a total-order comparator, so the result is deterministic
     per_doc = matched.groupBy("url", "lang", *extra_cols).agg(
-        F.collect_list(F.struct("position", "n_toks", "surface_form")).alias("_c")
+        F.expr("collect_list(struct(position, n_toks, surface_form)) AS _c")
     )
-    folded = _fold_leftmost_longest(F.col("_c"))
-    return per_doc.select(
-        "url", "lang", *extra_cols, F.explode(folded).alias("g")
-    ).select(
-        "url",
-        F.col("g.surface_form").alias("surface_form"),
-        F.col("g.position").alias("position"),
-        "lang",
-        *extra_cols,
-    )
+    return per_doc.selectExpr(
+        "url", "lang", *extra_cols, f"explode({_fold_leftmost_longest('_c')}) AS g"
+    ).selectExpr(*_MENTION_COLS, *extra_cols)
 
 
 def detect_mentions_tokenized(webtext: DataFrame, gazetteer: DataFrame) -> DataFrame:

@@ -26,6 +26,7 @@ from esmarc_spark.pipeline.mentions import (
     detect_mentions_tokenized,
 )
 from esmarc_spark.pipeline.checkpoint import CheckpointStore
+from esmarc_spark.pipeline.sqltext import sql_lit
 
 
 # Gopher-style repetition gate defaults: (max dup_line_frac,
@@ -406,7 +407,7 @@ def run_pipeline(
         canonical_map = canonical_mapping(same_as_edges)
     if canonical_map is not None:
         linked = rewrite_through_canonical(linked, canonical_map, "canonical_url")
-    return linked_to_triples(linked, source_index=source_index)
+    return linked_to_triples(linked, source_index=sql_lit(source_index))
 
 
 def _curated_day_docs(
@@ -446,7 +447,7 @@ def _folded_docs_to_triples(
     linked = linked.withColumn("pday", F.substring("url", 1, 10)).withColumn(
         "url", F.expr("substring(url, 11)")
     )
-    return linked_to_triples(linked, F.col("pday"), keys=("pday",))
+    return linked_to_triples(linked, "pday", keys=("pday",))
 
 
 def _corpus_dedup_apply(

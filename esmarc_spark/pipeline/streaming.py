@@ -22,8 +22,9 @@ from pyspark.sql import functions as F
 
 from esmarc_spark.pipeline.extract_text import with_extracted_text
 from esmarc_spark.pipeline.link import link_mentions
-from esmarc_spark.pipeline.materialize import entity_id_col, is_based_on_col
+from esmarc_spark.pipeline.materialize import ENTITY_ID_SQL, is_based_on_sql
 from esmarc_spark.pipeline.mentions import detect_mentions_ngram
+from esmarc_spark.pipeline.sqltext import sql_lit
 
 WEBTEXT_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -62,15 +63,13 @@ def _docs_to_page_triples(
 ) -> DataFrame:
     mentions = detect_mentions_ngram(docs, gazetteer)
     linked = link_mentions(mentions, gazetteer)
-    page_mentions = linked.select(
-        F.col("url").alias("subj"),
-        F.lit("mentions").alias("pred"),
-        entity_id_col().alias("obj"),
+    page_mentions = linked.selectExpr(
+        "url AS subj", "'mentions' AS pred", f"{ENTITY_ID_SQL} AS obj"
     )
-    page_prov = linked.select("url").dropDuplicates(["url"]).select(
-        F.col("url").alias("subj"),
-        F.lit("isBasedOn").alias("pred"),
-        is_based_on_col(source_index, F.col("url")).alias("obj"),
+    page_prov = linked.select("url").dropDuplicates(["url"]).selectExpr(
+        "url AS subj",
+        "'isBasedOn' AS pred",
+        f"{is_based_on_sql(sql_lit(source_index), 'url')} AS obj",
     )
     return page_mentions.unionByName(page_prov)
 

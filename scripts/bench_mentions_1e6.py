@@ -103,7 +103,7 @@ def main() -> None:
         )
         fp = (
             probes.crossJoin(F.broadcast(bloom_df))
-            .where(_bloom_test(m_bits, F.col("t")))
+            .where(_bloom_test(m_bits, "t"))
             .count()
         )
 

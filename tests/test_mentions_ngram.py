@@ -78,24 +78,39 @@ def test_ngram_matches_tokenized_on_single_tokens(spark):
 
 
 def test_ngram_matches_regex_surfaces(spark):
-    # multi-word parity with the pandas-UDF regex detector on (url, surface)
+    # multi-word parity with the pandas-UDF regex detector on (url, surface),
+    # on both physical paths. The inline path embeds every surface form in
+    # SQL text, so the inputs carry the characters a Spark SQL literal must
+    # escape or could misread (quote, backslash, both together), LIKE and
+    # format metacharacters, and non-ASCII letters
     docs = _docs(
         spark,
         [
             ("u1", "Die Deutsche Nationalbibliothek in Frankfurt am Main", "de"),
             ("u2", "Frankfurt ist nicht Frankfurt am Main", "de"),
+            ("u3", "O'Brien traf Rock$tar bei 50%Rabatt in Zürich-Ost", "de"),
+            ("u4", "Pfad C:\\Temp und Back\\'slash, dann l'Île de France", "fr"),
+            ("u5", "fmt{0}x und 100% und Ærø Straße, nicht O'Brie", "de"),
         ],
     )
-    surfaces = ["Deutsche Nationalbibliothek", "Frankfurt am Main", "Frankfurt"]
-    a = {
-        (r.url, r.surface_form)
-        for r in detect_mentions_ngram(docs, _gaz(spark, surfaces)).collect()
-    }
-    b = {
-        (r.url, r.surface_form)
-        for r in detect_mentions(docs, surfaces).collect()
-    }
-    assert a == b
+    surfaces = [
+        "Deutsche Nationalbibliothek", "Frankfurt am Main", "Frankfurt",
+        "O'Brien", "Rock$tar", "50%Rabatt", "Zürich-Ost", "C:\\Temp",
+        "Back\\'slash", "l'Île de France", "fmt{0}x", "Ærø Straße",
+    ]
+    # 4,097 extra surfaces push the gazetteer past max_inline_surfaces
+    fillers = [f"zzfill{i} qq" for i in range(4097)]
+    for extra, join_path in (([], False), (fillers, True)):
+        found = detect_mentions_ngram(docs, _gaz(spark, surfaces + extra))
+        plan = found._jdf.queryExecution().optimizedPlan().toString()
+        assert ("_anchor_bloom" in plan) == join_path
+        a = {(r.url, r.surface_form) for r in found.collect()}
+        b = {
+            (r.url, r.surface_form)
+            for r in detect_mentions(docs, surfaces + extra).collect()
+        }
+        assert a == b
+        assert {s for _, s in a} >= {"O'Brien", "C:\\Temp", "Back\\'slash", "fmt{0}x"}
 
 
 def test_ngram_plan_has_no_gazetteer_literals(spark):
@@ -233,7 +248,7 @@ def test_anchor_bloom_no_false_negatives(spark):
         probes.crossJoin(F.broadcast(bloom_df))
         .select(
             F.col("t").startswith("tok").alias("member"),
-            _bloom_test(m, F.col("t")).alias("hit"),
+            F.expr(_bloom_test(m, "t")).alias("hit"),
         )
         .groupBy("member")
         .agg(F.sum(F.col("hit").cast("int")).alias("n_hit"), F.count("*").alias("n"))

@@ -8,6 +8,7 @@ from esmarc_spark.pipeline.link import count_mentions_salted, link_mentions
 from esmarc_spark.pipeline.materialize import linked_to_triples
 from esmarc_spark.pipeline.mentions import detect_mentions, detect_mentions_tokenized
 from esmarc_spark.pipeline.run import run_pipeline
+from esmarc_spark.pipeline.sqltext import sql_lit
 from esmarc_spark.pipeline.webtext import GAZETTEER_ROWS, gazetteer_df, synth_webtext
 
 N_DOCS = 300
@@ -38,10 +39,8 @@ def test_extract_text_byte_identity(webtext):
     from esmarc_spark.pipeline.extract_text import extract_text_expr, extract_text_udf
 
     both = webtext.where(F.col("html").isNotNull() & F.col("text").isNotNull())
-    for extractor in (extract_text_expr, extract_text_udf):
-        checked = both.select(
-            "url", "text", extractor(F.col("html")).alias("extracted")
-        )
+    for extracted in (extract_text_expr("html"), extract_text_udf(F.col("html"))):
+        checked = both.select("url", "text", extracted.alias("extracted"))
         mismatches = checked.where(F.col("text") != F.col("extracted")).collect()
         assert mismatches == []
 
@@ -65,7 +64,7 @@ def test_extract_paths_byte_identical(spark):
         [(c.encode("utf-8"),) for c in cases], "html binary"
     )
     out = df.select(
-        extract_text_expr(F.col("html")).alias("jvm"),
+        extract_text_expr("html").alias("jvm"),
         extract_text_udf(F.col("html")).alias("py"),
     ).collect()
     for row, case in zip(out, cases):
@@ -89,7 +88,7 @@ def test_extract_non_utf8_lossy(spark):
     ]
     df = spark.createDataFrame([(c,) for c in cases], "html binary")
     out = df.select(
-        extract_text_expr(F.col("html")).alias("jvm"),
+        extract_text_expr("html").alias("jvm"),
         extract_text_udf(F.col("html")).alias("py"),
     ).collect()
     for row, case in zip(out, cases):
@@ -202,14 +201,15 @@ def test_keyed_emission_matches_per_day(spark):
                              etype, auth, canon))
     linked = spark.createDataFrame(rows, cols)
 
-    keyed = linked_to_triples(linked, F.col("pday"), keys=("pday",))
+    keyed = linked_to_triples(linked, "pday", keys=("pday",))
     assert keyed.columns == ["pday", "subj", "pred", "obj"]
     got = sorted(map(tuple, keyed.collect()))
     want = sorted(
         (day, *r)
         for day in days
         for r in linked_to_triples(
-            linked.where(F.col("pday") == day).drop("pday"), source_index=day
+            linked.where(F.col("pday") == day).drop("pday"),
+            source_index=sql_lit(day),
         ).collect()
     )
     assert got == want
