@@ -14,6 +14,7 @@ import types
 
 import pytest
 
+from tests.conftest import needs_reference
 from tests.test_reference_oracle import _install_shims
 
 
@@ -113,6 +114,7 @@ def _ef_record():
     }
 
 
+@needs_reference("enrichment/entityfacts.py")
 def test_entityfacts_parity(spark, fake_requests):
     ref = _load_ref("entityfacts", fake_requests)
     fake_requests.routes = [(f"/{GND}", {"sameAs": copy.deepcopy(EF_SAME_AS)})]
@@ -160,6 +162,7 @@ def _wd_record():
     }
 
 
+@needs_reference("enrichment/wikidata.py")
 def test_wikidata_parity(spark, fake_requests):
     ref = _load_ref("wikidata", fake_requests)
     fake_requests.routes = [
@@ -249,6 +252,7 @@ def _sach_routes():
     ],
     ids=["no-about", "dict-about-dup", "list-about"],
 )
+@needs_reference("enrichment/gnd_sachgruppen.py")
 def test_sachgruppen_parity(spark, fake_requests, about):
     ref = _load_ref("gnd_sachgruppen", fake_requests)
     fake_requests.routes = _sach_routes()
@@ -301,6 +305,7 @@ def _wp_record(obsolete_dewiki=False):
 
 
 @pytest.mark.parametrize("obsolete", [False, True], ids=["append", "replace-obsolete"])
+@needs_reference("enrichment/wikipedia.py")
 def test_wikipedia_sitelinks_parity(spark, fake_requests, obsolete):
     ref = _load_ref("wikipedia", fake_requests)
     fake_requests.routes = [
@@ -350,6 +355,7 @@ def _wpcat_record():
     }
 
 
+@needs_reference("enrichment/wikipedia_categories.py")
 def test_wikipedia_categories_parity(spark, fake_requests):
     ref = _load_ref("wikipedia_categories", fake_requests)
     fake_requests.routes = [
@@ -394,6 +400,7 @@ def _gn_record():
     }
 
 
+@needs_reference("enrichment/geonames.py")
 def test_geonames_parity(spark, fake_requests, monkeypatch):
     import math
 
@@ -529,6 +536,7 @@ def _two_wiki_record():
     return rec
 
 
+@needs_reference("enrichment/wikipedia_categories.py")
 def test_wpcat_barren_title_drops_whole_record(spark, fake_requests):
     # ref :74-78: a pages-less API response for ANY link raises KeyError ->
     # None for the whole record, discarding the other links' categories
@@ -550,6 +558,7 @@ def test_wpcat_barren_title_drops_whole_record(spark, fake_requests):
     assert enrich_wikipedia_categories(records, pages).count() == 0
 
 
+@needs_reference("enrichment/wikipedia_categories.py")
 def test_wpcat_multi_link_parity(spark, fake_requests):
     ref = _load_ref("wikipedia_categories", fake_requests)
     en_pages = {"2001": {"title": "Category:Cities in Saxony"}}
@@ -573,6 +582,7 @@ def test_wpcat_multi_link_parity(spark, fake_requests):
     assert ours == {"r1": theirs}
 
 
+@needs_reference("enrichment/wikipedia_categories.py")
 def test_wpcat_malformed_link_does_not_abort(spark, fake_requests):
     # a sameAs id containing "wikipedia" with too few slash parts used to
     # ANSI-abort the whole job at the element_at(split, 3); the reference

@@ -2,13 +2,13 @@
 
 import glob
 import json
-from pathlib import Path
 
 import pytest
 
 from esmarc_spark.cli import main
+from tests.conftest import REFERENCE_IDS, REFERENCE_TESTS, needs_reference
 
-FIXTURES = Path("/root/reference/tests/in")
+FIXTURES = REFERENCE_TESTS / "in"
 
 
 @pytest.fixture()
@@ -19,6 +19,7 @@ def records_ldj(tmp_path):
     return str(p)
 
 
+@needs_reference("tests/in")
 def test_cli_batch_run_writes_per_entity_ldj(spark, records_ldj, tmp_path, capsys):
     out = str(tmp_path / "out")
     assert main(["-in", records_ldj, "-prefix", out, "-z", "-w", "4"]) == 0
@@ -32,8 +33,9 @@ def test_cli_batch_run_writes_per_entity_ldj(spark, records_ldj, tmp_path, capsy
     assert len(docs) == 17 and all("@id" in d for d in docs)
 
 
+@needs_reference("tests/in")
 def test_cli_debug_single_record(spark, records_ldj, capsys):
-    rid = sorted(p.name for p in FIXTURES.iterdir())[0]
+    rid = REFERENCE_IDS[0]
     assert main(["-in", records_ldj, "-id", rid, "-debug"]) == 0
     out_lines = [l for l in capsys.readouterr().out.splitlines() if l.startswith("{")]
     assert len(out_lines) == 1
@@ -41,8 +43,9 @@ def test_cli_debug_single_record(spark, records_ldj, capsys):
     assert doc["_ppn"] == rid
 
 
+@needs_reference("tests/in")
 def test_cli_idfile_semi_join(spark, records_ldj, tmp_path, capsys):
-    ids = sorted(p.name for p in FIXTURES.iterdir())[:3]
+    ids = REFERENCE_IDS[:3]
     idfile = tmp_path / "ids.txt"
     idfile.write_text("\n".join(ids) + "\n")
     out = str(tmp_path / "out")
@@ -51,6 +54,10 @@ def test_cli_idfile_semi_join(spark, records_ldj, tmp_path, capsys):
     assert sum(summary["per_entity"].values()) == 3
 
 
-def test_cli_rejects_foreign_target_id(records_ldj):
-    with pytest.raises(SystemExit):
-        main(["-in", records_ldj, "-target_id", "https://other.example.org/"])
+def test_cli_rejects_foreign_target_id(tmp_path):
+    # the guard fires before any session is built or input read, so an empty
+    # records file suffices
+    records = tmp_path / "records.ldj"
+    records.write_text("")
+    with pytest.raises(SystemExit, match="compile-time constants"):
+        main(["-in", str(records), "-target_id", "https://other.example.org/"])

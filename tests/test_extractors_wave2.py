@@ -22,7 +22,7 @@ from esmarc_spark.mapping.nodes import (
     build_topic_name,
     relation_predicate,
 )
-from tests.conftest import load_fixture_record
+from tests.conftest import load_fixture_record, needs_reference
 
 
 def _rec(tag, ind, subfields, extra=None):
@@ -138,6 +138,7 @@ def test_title_main_and_sub():
     assert t["responsibilityStatement"] == "By Jane /"
 
 
+@needs_reference("tests/in")
 def test_title_fixture_record_has_uniform_titles():
     record = load_fixture_record("1131213920")
     t = build_title(record, None, "resources")

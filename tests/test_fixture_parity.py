@@ -17,7 +17,10 @@ from esmarc_spark.mapping.extractors import (
     build_publish_locations,
     build_publisher,
 )
-from tests.conftest import load_fixture_record, load_golden
+from tests.conftest import load_fixture_record, load_golden, needs_reference
+
+# every case reads its record from tests/in and its golden from tests/out
+pytestmark = needs_reference("tests/in", "tests/out")
 
 MENTION_KEYS = ["600", "610", "611", "630", "648", "650", "651", "653", "655", "689"]
 

@@ -12,9 +12,7 @@ from esmarc_spark.mapping.engine import (
     DOCS_SCHEMA,
     TRIPLES_SCHEMA,
 )
-from tests.conftest import REFERENCE_TESTS, load_fixture_record
-
-ALL_IDS = sorted(p.name for p in (REFERENCE_TESTS / "in").iterdir())
+from tests.conftest import REFERENCE_IDS, load_fixture_record, needs_reference
 
 
 def test_scrub():
@@ -22,6 +20,7 @@ def test_scrub():
     assert scrub({"a": ["x", None, ""]}) == {"a": ["x"]}
 
 
+@needs_reference("tests/in")
 def test_map_record_resources():
     record = load_fixture_record("1131213920")
     entity, doc = map_record(record)
@@ -36,6 +35,7 @@ def test_map_record_resources():
     assert all(v not in (None, [], {}, "") for v in doc.values())
 
 
+@needs_reference("tests/in")
 def test_same_as_provenance_backfill():
     record = load_fixture_record("1131213920")
     _, doc = map_record(record, index="slub-lod")
@@ -45,6 +45,7 @@ def test_same_as_provenance_backfill():
             assert node["@id"].startswith("https://swb.bsz-bw.de/")
 
 
+@needs_reference("tests/in")
 def test_record_to_triples():
     record = load_fixture_record("1131213920")
     triples = list(record_to_triples(record))
@@ -55,21 +56,23 @@ def test_record_to_triples():
     assert {"@type", "mentions", "sameAs"} <= preds
 
 
+@needs_reference("tests/in")
 def test_all_fixture_records_map():
-    mapped = [map_record(load_fixture_record(rid)) for rid in ALL_IDS]
+    mapped = [map_record(load_fixture_record(rid)) for rid in REFERENCE_IDS]
     assert all(m is not None for m in mapped)
     entities = {e for e, _ in mapped}
     assert "resources" in entities
 
 
+@needs_reference("tests/in")
 def test_spark_map_in_pandas(spark):
-    rows = [(rid, json.dumps(load_fixture_record(rid))) for rid in ALL_IDS]
+    rows = [(rid, json.dumps(load_fixture_record(rid))) for rid in REFERENCE_IDS]
     df = spark.createDataFrame(rows, "record_id string, marc_json string")
     docs = df.mapInPandas(mapped_docs_batches, schema=DOCS_SCHEMA)
     out = {r["record_id"]: json.loads(r["doc"]) for r in docs.collect()}
-    assert len(out) == len(ALL_IDS)
+    assert len(out) == len(REFERENCE_IDS)
     # spark result identical to local result
-    for rid in ALL_IDS:
+    for rid in REFERENCE_IDS:
         _, local_doc = map_record(load_fixture_record(rid))
         assert out[rid] == json.loads(json.dumps(local_doc, sort_keys=True))
 

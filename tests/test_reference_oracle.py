@@ -25,9 +25,11 @@ import types
 
 import pytest
 
-from tests.conftest import REFERENCE_TESTS, load_fixture_record
+from tests.conftest import REFERENCE_IDS, load_fixture_record, needs_reference
 
-ALL_IDS = sorted(p.name for p in (REFERENCE_TESTS / "in").iterdir())
+# every test here imports the reference's esmarc/ package and loops over the
+# fixture records
+pytestmark = needs_reference("esmarc", "tests/in")
 
 
 # ---------------------------------------------------------------------------
@@ -220,7 +222,7 @@ def test_reference_oracle_parity(ref):
     total = 0
     for label, ours, key, ref_mod_name, ref_fn_name in _cases():
         ref_fn = getattr(importlib.import_module(f"esmarc.{ref_mod_name}"), ref_fn_name)
-        for rid in ALL_IDS:
+        for rid in REFERENCE_IDS:
             total += 1
             # deep-copied inputs: several reference extractors mutate the record
             theirs_out = ref_fn(copy.deepcopy(load_fixture_record(rid)), copy.deepcopy(key), "resources")
@@ -250,7 +252,7 @@ def test_reference_oracle_exactness_report(ref):
     for label, ours, key, ref_mod_name, ref_fn_name in _cases():
         ref_fn = getattr(importlib.import_module(f"esmarc.{ref_mod_name}"), ref_fn_name)
         bad = 0
-        for rid in ALL_IDS:
+        for rid in REFERENCE_IDS:
             theirs_out = ref_fn(copy.deepcopy(load_fixture_record(rid)), copy.deepcopy(key), "resources")
             ours_out = ours(copy.deepcopy(load_fixture_record(rid)), copy.deepcopy(key), "resources")
             if canon(ours_out) != canon(theirs_out):
@@ -296,7 +298,7 @@ def test_reference_oracle_works_getmarc_cells(ref):
 
     mismatches = []
     for prop, key in WORKS_GETMARC_CELLS.items():
-        for rid in ALL_IDS:
+        for rid in REFERENCE_IDS:
             rec = load_fixture_record(rid)
             ours = canon(field_values(copy.deepcopy(rec), copy.deepcopy(key), "works"))
             theirs = canon(getmarc(copy.deepcopy(rec), copy.deepcopy(key), "works"))
@@ -346,7 +348,7 @@ def test_reference_oracle_record_e2e(ref, code, entity):
     from esmarc_spark.mapping.engine import map_record
 
     mismatches = []
-    for rid in ALL_IDS:
+    for rid in REFERENCE_IDS:
         rec = load_fixture_record(rid)
         if code is None:
             rec.pop("079", None)

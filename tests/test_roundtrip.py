@@ -9,9 +9,7 @@ from esmarc_spark.mapping.engine import (
     map_record,
     triples_batches,
 )
-from tests.conftest import REFERENCE_TESTS, load_fixture_record
-
-ALL_IDS = sorted(p.name for p in (REFERENCE_TESTS / "in").iterdir())
+from tests.conftest import REFERENCE_IDS, load_fixture_record, needs_reference
 
 
 def _normalize(value):
@@ -33,13 +31,14 @@ def _normalize(value):
     return value
 
 
+@needs_reference("tests/in")
 def test_roundtrip_fixture_docs(spark):
-    rows = [(rid, json.dumps(load_fixture_record(rid))) for rid in ALL_IDS]
+    rows = [(rid, json.dumps(load_fixture_record(rid))) for rid in REFERENCE_IDS]
     df = spark.createDataFrame(rows, "record_id string, marc_json string")
     triples = df.mapInPandas(triples_batches, schema=TRIPLES_SCHEMA)
     rebuilt = {r.subj: json.loads(r.doc) for r in docs_from_triples(triples).collect()}
 
-    for rid in ALL_IDS:
+    for rid in REFERENCE_IDS:
         entity, original = map_record(load_fixture_record(rid))
         subj = original["@id"]
         got = rebuilt[subj]

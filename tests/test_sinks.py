@@ -17,8 +17,9 @@ from esmarc_spark.pipeline.sinks import (
     read_entity_ldj,
     write_entity_ldj,
 )
+from tests.conftest import REFERENCE_TESTS, needs_reference
 
-FIXTURE_DIR = Path("/root/reference/tests/in")
+FIXTURE_DIR = REFERENCE_TESTS / "in"
 
 
 def _mapped_docs(spark):
@@ -27,6 +28,7 @@ def _mapped_docs(spark):
     return raw.mapInPandas(mapped_docs_batches, schema=DOCS_SCHEMA)
 
 
+@needs_reference("tests/in")
 def test_entity_ldj_roundtrip(spark, tmp_path):
     out = str(tmp_path / "ldj")
     docs = _mapped_docs(spark).cache()
@@ -58,6 +60,7 @@ def test_entity_ldj_roundtrip(spark, tmp_path):
     assert back2 == originals
 
 
+@needs_reference("tests/in")
 def test_entity_ldj_typed_read_schema_stable(spark, tmp_path):
     out = str(tmp_path / "ldj")
     docs = _mapped_docs(spark)
