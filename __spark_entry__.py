@@ -1422,7 +1422,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # entirely from spark.range expressions; the bot joins on the GND
         # id and litter-merges provider sameAs entries (exact reference
         # parity is pytest-gated in tests/test_bots.py). Oracle: vendored
-        # golden (scripts/regen_golden_entityfacts.py).
+        # golden (scripts/regen_golden_bots.py).
         from pyspark.sql import functions as F
 
         from esmarc_spark.pipeline.bots import enrich_entityfacts

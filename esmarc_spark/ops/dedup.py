@@ -504,7 +504,6 @@ def dedup_corpus(
     bands: int = 4,
     shingle_k: int = 3,
     max_bucket_size: int = 256,
-    cc_stats: dict | None = None,
 ) -> DataFrame:
     """THE corpus dedup a training-data pipeline actually runs: near-dup
     edges -> connected components (transitive closure — A~B and B~C
@@ -525,7 +524,7 @@ def dedup_corpus(
     edges = near_dup_edges(
         documents, threshold, num_hashes, bands, shingle_k, max_bucket_size
     ).select(node("doc_a").alias("src"), node("doc_b").alias("dst"))
-    mapping = canonical_mapping(edges, stats=cc_stats).select(
+    mapping = canonical_mapping(edges).select(
         F.col("uri").alias("_u"), F.col("canonical_uri").alias("_c")
     ).select(
         unnode("_u").alias("doc_id"), unnode("_c").alias("_root")

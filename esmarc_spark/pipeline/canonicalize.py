@@ -78,20 +78,20 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
 def connected_components(
     edges: DataFrame,
     max_iter: int = 20,
-    checkpoint_every: int = 1,
     stats: dict | None = None,
 ) -> DataFrame:
     """(src, dst) string edges -> (node, component) with component = min uri.
 
     Deterministic, idempotent; converges in O(log n) alternating rounds.
 
-    Action cadence (measured, scripts/bench_cc.py @ 1M edges/16 cores):
+    Action cadence (measured at 1M edges/16 cores, BENCH/BASELINE.md):
     each star scans its input relation TWICE (the symmetrized/oriented set
     feeds both the per-node min aggregate and the join), so un-checkpointed
     lineage recomputes ~2^(2k) subtrees after k lazy rounds — checkpointing
-    every 3rd round measured 82s, every 2nd 16s, EVERY round 7.4s. The
-    eager localCheckpoint materializes the round once, and the convergence
-    checksum then scans cached partitions instead of re-running shuffles.
+    every 3rd round measured 82s, every 2nd 16s, EVERY round 7.4s, so every
+    round checkpoints. The eager localCheckpoint materializes the round
+    once, and the convergence checksum then scans cached partitions instead
+    of re-running shuffles.
     (On a real cluster swap localCheckpoint for a reliable checkpoint dir
     if executor loss during the iteration must be survivable.)
     """
@@ -104,17 +104,15 @@ def connected_components(
     prev = cur = None
     rounds = 0
     for i in range(max_iter):
-        e = _small_star(_large_star(e))
+        e = _small_star(_large_star(e)).localCheckpoint(eager=True)
         rounds = i + 1
-        if (i + 1) % checkpoint_every == 0 or i == max_iter - 1:
-            e = e.localCheckpoint(eager=True)
-            cur = _checksum(e)
-            if cur == prev:
-                break
-            prev = cur
+        cur = _checksum(e)
+        if cur == prev:
+            break
+        prev = cur
     if stats is not None:
-        # observability for scale benches: rounds actually run and the
-        # converged edge count (cur is (n_edges, checksum))
+        # observability for the traced benchmark run: rounds actually run
+        # and the converged edge count (cur is (n_edges, checksum))
         stats["cc_rounds"] = rounds
         stats["cc_edges"] = cur[0] if cur is not None else 0
     # after convergence every edge points node -> component min

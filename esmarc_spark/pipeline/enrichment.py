@@ -76,10 +76,10 @@ def spatial_enrich(
     entities: DataFrame,
     gazetteer: DataFrame,
     radius_km: float = 0.1,
-    name_match: bool = True,
 ) -> DataFrame:
     """entities(name, lat, lon, ...) ⋈ gazetteer(geo_name, geo_lat, geo_lon,
-    geo_id) within radius_km, optional substring name predicate.
+    geo_id) within radius_km whose geo_name contains the entity name
+    (case-insensitive substring).
 
     Cell size = radius in degrees of LATITUDE. One degree of longitude spans
     fewer km away from the equator (shrinks by cos(lat)), so r km can cross
@@ -121,10 +121,7 @@ def spatial_enrich(
     joined = probes.join(gaz, "_cell", "inner").drop("_cell")
     dist = _haversine_km(F.col("lat"), F.col("lon"), F.col("geo_lat"), F.col("geo_lon"))
     out = joined.withColumn("distance_km", F.round(dist, 6)).where(
-        F.col("distance_km") <= radius_km
+        (F.col("distance_km") <= radius_km)
+        & (F.instr(F.lower(F.col("geo_name")), F.lower(F.col("name"))) > 0)
     )
-    if name_match:
-        out = out.where(
-            F.instr(F.lower(F.col("geo_name")), F.lower(F.col("name"))) > 0
-        )
     return out.dropDuplicates(["name", "lat", "lon", "geo_id"])

@@ -73,9 +73,9 @@ def detect_mentions(webtext: DataFrame, surface_forms: list[str]) -> DataFrame:
     the JVM for cores (round-1 measurement — throughput DROPPED going
     8->32 local threads). It exists only for exact char-offset /
     word-boundary semantics (punctuation-adjacent matches) that the
-    token n-gram join cannot express; ``run_pipeline`` defaults to the
-    JVM join path (mentions_mode="ngram") and nobody should flip
-    ``mentions_mode="regex"`` at corpus scale expecting parity.
+    token n-gram join cannot express; ``run_pipeline``'s ``mentions_mode``
+    is "ngram" (the default, the JVM join path) or "regex" (this scan),
+    and nobody should flip it to "regex" at corpus scale expecting parity.
 
     The gazetteer ships as a SparkContext broadcast variable (torrent
     distribution, once per executor) rather than a closure capture that
@@ -143,18 +143,16 @@ def _tokens_base(webtext: DataFrame, extra_cols: tuple[str, ...]) -> DataFrame:
 _TOK_AT_I = "element_at(_toks, i)"
 
 
-def _positions(anchor_test: str | None = None) -> str:
-    """1-based candidate start positions over _toks; with ``anchor_test``
-    (SQL text over the token ``_TOK_AT_I``) only positions whose token
-    can START a surface form survive (the cheap per-token test that
-    avoids building n-gram strings at every position)."""
+def _positions(anchor_test: str) -> str:
+    """1-based candidate start positions over _toks whose token passes
+    ``anchor_test`` (SQL text over the token ``_TOK_AT_I``): only positions
+    whose token can START a surface form survive (the cheap per-token test
+    that avoids building n-gram strings at every position)."""
     pos = (
         "CASE WHEN size(_toks) >= 1 THEN sequence(1, size(_toks)) "
         "ELSE CAST(array() AS array<int>) END"
     )
-    if anchor_test is not None:
-        pos = f"filter({pos}, i -> {anchor_test})"
-    return pos
+    return f"filter({pos}, i -> {anchor_test})"
 
 
 BLOOM_COL = "_anchor_bloom"
@@ -332,10 +330,8 @@ def _inline_fold_sql(surface_key: tuple, lengths_key: tuple) -> str:
 def detect_mentions_ngram(
     webtext: DataFrame,
     gazetteer: DataFrame,
-    max_n: int | None = None,
     extra_cols: tuple[str, ...] = (),
     max_inline_surfaces: int = 4096,
-    anchor_prefilter: bool = True,
 ) -> DataFrame:
     """JVM-only multi-word gazetteer scan: token n-grams ⋈ broadcast(surfaces).
 
@@ -357,7 +353,8 @@ def detect_mentions_ngram(
       it, gram construction costs corpus_tokens x |lengths| string concats
       at every position); surviving n-grams are exploded and membership is
       decided exactly by a broadcast hash join (plan size independent of
-      gazetteer cardinality — the bitmap is one opaque binary literal); the
+      gazetteer cardinality — the bitmap rides a broadcast single-row cross
+      join, never a plan literal, see ``_bloom_build``); the
       leftmost-longest fold then re-groups per document — a shuffle
       carrying ONLY matched mentions, never the corpus.
 
@@ -407,8 +404,6 @@ def detect_mentions_ngram(
         )
         lengths = sorted(row["ns"])
         n_tok0 = row["n0"]
-    if max_n is not None:
-        lengths = [n for n in lengths if n <= max_n]
     if not lengths:
         # empty gazetteer -> empty mentions with a stable schema, derived
         # from the INPUT frame so a streaming caller gets a streaming frame
@@ -429,14 +424,12 @@ def detect_mentions_ngram(
             "url", "lang", *extra_cols, f"explode({folded}) AS g"
         ).selectExpr(*_MENTION_COLS, *extra_cols)
 
-    pos = _positions()
-    if anchor_prefilter:
-        # the bitmap rides a broadcast single-row cross join (no shuffle,
-        # no plan literal); positions whose token fails the first-token
-        # Bloom never build a gram
-        bloom_df, m_bits = _bloom_build(surf_df, n_tok0)
-        base = base.crossJoin(F.broadcast(bloom_df))
-        pos = _positions(_bloom_test(m_bits, _TOK_AT_I))
+    # the bitmap rides a broadcast single-row cross join (no shuffle, no
+    # plan literal); positions whose token fails the first-token Bloom
+    # never build a gram
+    bloom_df, m_bits = _bloom_build(surf_df, n_tok0)
+    base = base.crossJoin(F.broadcast(bloom_df))
+    pos = _positions(_bloom_test(m_bits, _TOK_AT_I))
     candidates = base.selectExpr(
         "url", "lang", *extra_cols, f"explode({_gram_structs(lengths, pos)}) AS g"
     ).selectExpr(

@@ -20,11 +20,7 @@ from esmarc_spark.pipeline.canonicalize import canonical_mapping, rewrite_throug
 from esmarc_spark.pipeline.extract_text import dedup_by_url, with_extracted_text
 from esmarc_spark.pipeline.link import link_mentions
 from esmarc_spark.pipeline.materialize import linked_to_triples
-from esmarc_spark.pipeline.mentions import (
-    detect_mentions,
-    detect_mentions_ngram,
-    detect_mentions_tokenized,
-)
+from esmarc_spark.pipeline.mentions import detect_mentions, detect_mentions_ngram
 from esmarc_spark.pipeline.checkpoint import CheckpointStore
 from esmarc_spark.pipeline.sqltext import sql_lit
 
@@ -326,9 +322,8 @@ def run_pipeline(
     -> S5 triples. Returns the triples DataFrame (lazy).
 
     mentions_mode: "ngram" (default — JVM-only token n-gram join, the hot
-    path that scales), "regex" (pandas-UDF char-offset scan; exact
-    word-boundary semantics incl. punctuation-adjacent matches), or "token"
-    (single-token JVM join).
+    path that scales) or "regex" (pandas-UDF char-offset scan; exact
+    word-boundary semantics incl. punctuation-adjacent matches).
 
     Pass ``canonical_map`` (precomputed uri->canonical dim) when calling in
     a loop — recomputing connected components per partition would repeat the
@@ -397,11 +392,11 @@ def run_pipeline(
     )
     if mentions_mode == "ngram":
         mentions = detect_mentions_ngram(docs, gazetteer)
-    elif mentions_mode == "token":
-        mentions = detect_mentions_tokenized(docs, gazetteer)
-    else:
+    elif mentions_mode == "regex":
         surfaces = [r["surface_form"] for r in gazetteer.select("surface_form").distinct().collect()]
         mentions = detect_mentions(docs, surfaces)
+    else:
+        raise ValueError(f"mentions_mode must be 'ngram' or 'regex', not {mentions_mode!r}")
     linked = link_mentions(mentions, gazetteer)
     if canonical_map is None and same_as_edges is not None:
         canonical_map = canonical_mapping(same_as_edges)

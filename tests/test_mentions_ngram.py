@@ -205,15 +205,8 @@ def test_ngram_randomized_against_python_reference(spark):
         (r.url, r.surface_form, r.position)
         for r in detect_mentions_ngram(df, gaz, max_inline_surfaces=0).collect()
     }
-    join_unfiltered = {
-        (r.url, r.surface_form, r.position)
-        for r in detect_mentions_ngram(
-            df, gaz, max_inline_surfaces=0, anchor_prefilter=False
-        ).collect()
-    }
     assert inline == expected
     assert join == expected
-    assert join_unfiltered == expected
 
 
 def test_ngram_empty_gazetteer_streaming_stays_streaming(spark, tmp_path):

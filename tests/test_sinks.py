@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import glob
 import json
-from pathlib import Path
 
 from pyspark.sql import functions as F
 
@@ -17,7 +16,7 @@ from esmarc_spark.pipeline.sinks import (
     read_entity_ldj,
     write_entity_ldj,
 )
-from tests.conftest import REFERENCE_TESTS, needs_reference
+from tests.conftest import REFERENCE, REFERENCE_TESTS, needs_reference
 
 FIXTURE_DIR = REFERENCE_TESTS / "in"
 
@@ -89,21 +88,29 @@ def test_entity_ldj_typed_read_schema_stable(spark, tmp_path):
 
 
 def test_entity_structs_cover_reference_mappings():
-    # every reference mapping/*.json entity has a StructType and its typed
-    # date nodes are present with the es_type=date metadata on the value key
-    ref_dir = Path("/root/reference/mapping")
-    for p in sorted(ref_dir.glob("*.json")):
-        entity = p.stem
+    # every vendored date node (ENTITY_DATE_NODES, copied from the
+    # reference mapping/*.json) is typed in its entity's StructType, with
+    # the es_type=date metadata on the value key
+    assert set(ENTITY_DATE_NODES) <= set(ENTITY_STRUCTS)
+    for entity, nodes in ENTITY_DATE_NODES.items():
+        for prop, value_key in nodes.items():
+            node = ENTITY_STRUCTS[entity][prop].dataType
+            assert value_key in node.fieldNames()
+            assert node[value_key].metadata == {"es_type": "date"}
+
+
+@needs_reference("mapping")
+def test_entity_date_nodes_match_reference_mappings():
+    # the vendored date nodes equal what the reference mappings type as date
+    paths = sorted((REFERENCE / "mapping").glob("*.json"))
+    assert paths
+    for p in paths:
         props = json.load(p.open())["mappings"]["properties"]
-        assert entity in ENTITY_STRUCTS
-        struct = ENTITY_STRUCTS[entity]
         for prop, spec in props.items():
             date_keys = [
                 k for k, v in spec["properties"].items() if v.get("type") == "date"
             ]
-            assert ENTITY_DATE_NODES[entity][prop] == date_keys[0]
-            node = struct[prop].dataType
-            assert node[date_keys[0]].metadata == {"es_type": "date"}
+            assert ENTITY_DATE_NODES[p.stem][prop] == date_keys[0]
 
 
 def test_write_entity_ldj_uncompressed(spark, tmp_path):

@@ -70,8 +70,8 @@ def test_cc_on_zipfian_giant_component(spark):
     component holds ~50% of all edges behind a single hub key. The star
     collapses in ~2 rounds, so the hub graph must not be slower than the
     uniform tail at equal edge count (the catastrophic-skew signature
-    would be the reverse by a wide margin); full decomposition lives in
-    scripts/bench_cc_skew.py -> BENCH/cc_skew.json."""
+    would be the reverse by a wide margin); the archived full
+    decomposition is BENCH/cc_skew.json."""
     import time
 
     from esmarc_spark.pipeline.canonicalize import connected_components

@@ -178,6 +178,9 @@ def test_triples_shapes(webtext, gazetteer):
     # determinism across runs
     rows2 = run_pipeline(webtext, gazetteer).collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, rows2))
+    # an unknown detector name is refused, not run as the regex scan
+    with pytest.raises(ValueError, match="mentions_mode"):
+        run_pipeline(webtext, gazetteer, mentions_mode="token")
 
 
 def test_keyed_emission_matches_per_day(spark):
