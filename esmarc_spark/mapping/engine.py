@@ -5,6 +5,22 @@
 entity dispatch, per-cell extraction, cardinality coercion, null/empty scrub,
 provenance stamp, sameAs isBasedOn backfill incl. the BSZ @id rewrite).
 
+ENTITY_MAPPING is compiled once, at import, into ``PLANS``: per entity, a
+tuple of ``(prop, evaluate, guard)`` cells in spec order plus the entity's
+constant ``prop -> single|multi`` cardinality. ``evaluate`` is the cell with
+its extractor, selector and entity bound. ``guard`` is the set of tags the
+cell looks up when it is evaluated once on an empty probe record that logs
+every ``get`` / ``in`` / ``[]`` and answers "absent". A cell gets no guard
+(None) if it is a literal, raises on the probe, yields a truthy value there,
+or iterates, sizes, copies or mutates the probe. ``map_record`` skips a
+guarded cell when the record has none of its guard tags.
+
+Why the skip is exact: an extractor is deterministic and reads the record
+only through those lookups, so on a record where every one of them misses
+it takes the same path as on the probe and yields the same falsy value,
+which ``map_record`` would drop anyway. Which cells are skipped follows from
+the extractors' own code, not from a hand-kept tag list.
+
 ``record_to_triples`` flattens a mapped document into (subj, pred, obj)
 rows: obj is a bare string for string values, else canonical JSON
 (sort_keys) — the graft's triple contract (FIXTURES.md §5).
@@ -16,7 +32,7 @@ generator over Arrow batches of (record_id, marc_json) rows.
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
@@ -47,37 +63,108 @@ def scrub(value: Any) -> Any:
     return value
 
 
-def _eval_cell(record: dict, cell: Any, entity: str) -> Any:
+def _compile_cell(cell: Any, entity: str) -> Callable[[dict], Any]:
+    """Resolve one spec cell into ``record -> value``: a literal stays a
+    constant, an extractor cell binds its function, selector and entity,
+    and a list cell merges its compiled parts."""
     if isinstance(cell, str):
-        return cell
+        return lambda record: cell
     if isinstance(cell, dict):
-        fn = EXTRACTORS[cell["fn"]]
-        return fn(record, cell.get("key"), entity)
+        fn, key = EXTRACTORS[cell["fn"]], cell.get("key")
+        return lambda record: fn(record, key, entity)
     if isinstance(cell, list):
-        acc = []
-        for sub in cell:
-            acc.append(collapse(_eval_cell(record, sub, entity)))
-        return collapse(acc) if acc else None
-    return None
+        parts = [_compile_cell(sub, entity) for sub in cell]
+
+        def merged(record: dict) -> Any:
+            acc = [collapse(part(record)) for part in parts]
+            return collapse(acc) if acc else None
+
+        return merged
+    return lambda record: None
 
 
-def map_record(
-    record: dict,
-    index: str | None = "source",
-    mapping: dict | None = None,
-) -> tuple[str, dict] | None:
-    """Map one parsed MARC record to (entity_type, JSON-LD doc), or None if
-    the record's 079..b code is unknown (dropped)."""
-    mapping = mapping or ENTITY_MAPPING
-    entity = entity_of(record)
-    if entity is None or entity not in mapping:
+class _Probe(dict):
+    """An empty record that logs every tag a cell looks up. A cell that
+    iterates, sizes, copies or mutates it is marked ``opaque``: its output
+    may depend on tags it never named, so it cannot be guarded."""
+
+    def __init__(self) -> None:
+        super().__init__()
+        self.looked_up: set = set()
+        self.opaque = False
+
+    def get(self, key, default=None):
+        self.looked_up.add(key)
+        return default
+
+    def __contains__(self, key) -> bool:
+        self.looked_up.add(key)
+        return False
+
+    def __getitem__(self, key):
+        self.looked_up.add(key)
+        raise KeyError(key)
+
+
+def _opaque(name: str) -> Callable:
+    def method(self, *args, **kwargs):
+        self.opaque = True
+        return getattr(dict, name)(self, *args, **kwargs)
+
+    return method
+
+
+for _name in (
+    "keys", "items", "values", "__iter__", "__reversed__", "__len__", "copy",
+    "setdefault", "pop", "popitem", "update", "clear", "__setitem__",
+    "__delitem__", "__eq__", "__ne__", "__or__", "__ror__", "__ior__",
+):
+    setattr(_Probe, _name, _opaque(_name))
+
+
+def _guard(evaluate: Callable[[dict], Any]) -> frozenset | None:
+    """The tags a cell looks up on an empty record, if that is all it reads
+    and it yields nothing there; else None (always evaluate the cell)."""
+    probe = _Probe()
+    try:
+        value = collapse(evaluate(probe))
+    except Exception:  # noqa: BLE001 - a cell that raises is never skipped
         return None
-    doc: dict[str, Any] = {}
-    cardinality: dict[str, str] = {}
-    for prop_key, cell in mapping[entity].items():
+    if value or probe.opaque:
+        return None
+    return frozenset(probe.looked_up)
+
+
+def _compile(entity: str, cells: dict) -> tuple[tuple, dict[str, str]]:
+    """One entity's spec -> its plan: ``(prop, evaluate, guard)`` per cell,
+    in spec order, and the entity's ``prop -> single|multi`` cardinality."""
+    plan, cardinality = [], {}
+    for prop_key, cell in cells.items():
         card, _, prop = prop_key.partition(":")
         cardinality[prop] = card
-        value = collapse(_eval_cell(record, cell, entity))
+        evaluate = _compile_cell(cell, entity)
+        plan.append((prop, evaluate, _guard(evaluate)))
+    return tuple(plan), cardinality
+
+
+PLANS: dict[str, tuple[tuple, dict[str, str]]] = {
+    entity: _compile(entity, cells) for entity, cells in ENTITY_MAPPING.items()
+}
+
+
+def map_record(record: dict, index: str | None = "source") -> tuple[str, dict] | None:
+    """Map one parsed MARC record to (entity_type, JSON-LD doc), or None if
+    the record's 079..b code is unknown (dropped)."""
+    entity = entity_of(record)
+    if entity not in PLANS:
+        return None
+    plan, cardinality = PLANS[entity]
+    tags = record.keys()
+    doc: dict[str, Any] = {}
+    for prop, evaluate, guard in plan:
+        if guard is not None and tags.isdisjoint(guard):
+            continue
+        value = collapse(evaluate(record))
         if not value:
             continue
         # dynamic relation fan-out: nodes carrying "_key" land under the

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from esmarc_spark.pipeline import fsio
+
 CHECKPOINT_SCHEMA = (
     "pday string, status string, watermark_ts timestamp, run_id string, "
     "run_ts double, n_docs long, n_mentions long, n_triples long, wall_sec double"
@@ -42,10 +44,13 @@ class CheckpointStore:
         self.path = root.rstrip("/") + "/checkpoints"
 
     def read(self) -> DataFrame:
-        try:
-            return self.spark.read.parquet(self.path)
-        except Exception:
+        """The lineage table; empty before the first append. Only absence
+        reads as empty (a directory holding just ``_temporary`` has no
+        data files, so it reads empty too): an unreadable table raises,
+        instead of silently re-running every day."""
+        if not fsio.exists(self.path):
             return self.spark.createDataFrame([], CHECKPOINT_SCHEMA)
+        return self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.path)
 
     def completed_partitions(self) -> DataFrame:
         """Latest status per partition, filtered to done."""

@@ -55,21 +55,27 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        t0 = time.time()
-        sdf = fn(spark, sf_dir)
-        s_cols = sdf.columns
-        s_rows = [tuple(r) for r in sdf.collect()]
-        spark_sec = time.time() - t0
-        if name not in oracles:
-            print(f"  {name:24s} rows-only: {len(s_rows)} rows  ({spark_sec:.1f}s)")
-            if not s_rows:
-                failures.append((name, "empty result"))
+        try:
+            t0 = time.time()
+            sdf = fn(spark, sf_dir)
+            s_cols = sdf.columns
+            s_rows = [tuple(r) for r in sdf.collect()]
+            spark_sec = time.time() - t0
+            if name not in oracles:
+                print(f"  {name:24s} rows-only: {len(s_rows)} rows  ({spark_sec:.1f}s)")
+                if not s_rows:
+                    failures.append((name, "empty result"))
+                continue
+            t0 = time.time()
+            rel = con.sql(oracles[name])
+            d_cols = [c.lower() for c in rel.columns]
+            d_rows = rel.fetchall()
+            duck_sec = time.time() - t0
+        except Exception as e:  # noqa: BLE001 - one broken query must not hide the rest
+            error = f"{type(e).__name__}: {(str(e).splitlines() or [''])[0]}"
+            print(f"  ERROR {name}: {error}")
+            failures.append((name, error))
             continue
-        t0 = time.time()
-        rel = con.sql(oracles[name])
-        d_cols = [c.lower() for c in rel.columns]
-        d_rows = rel.fetchall()
-        duck_sec = time.time() - t0
         problems = []
         if [c.lower() for c in s_cols] != d_cols:
             problems.append(f"columns {s_cols} != {d_cols}")

@@ -472,3 +472,30 @@ def test_run_incremental_corpus_dedup(spark, tmp_path):
         )
     resumed = run(crash_root, crash_state)
     assert resumed == daily
+
+
+def test_corrupt_lineage_table_raises(spark, tmp_path, inputs):
+    """An unreadable lineage table is an error, not "nothing done yet":
+    a garbage part file under checkpoints/ must fail the run instead of
+    silently re-running every day."""
+    import pathlib
+
+    webtext, gaz = inputs
+    root = tmp_path / "corrupt_lineage"
+    (root / "checkpoints").mkdir(parents=True)
+    (root / "checkpoints" / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        run_incremental(spark, webtext, gaz, str(root))
+    assert not pathlib.Path(root, "triples").exists()
+
+
+def test_lineage_with_only_temporary_resumes_empty(spark, tmp_path, inputs):
+    """A checkpoints/ dir left holding only an aborted append's
+    _temporary reads as an empty table: every day runs, once."""
+    webtext, gaz = inputs
+    root = tmp_path / "temporary_only"
+    (root / "checkpoints" / "_temporary" / "0").mkdir(parents=True)
+    assert CheckpointStore(spark, str(root)).read().count() == 0
+    res = run_incremental(spark, webtext, gaz, str(root))
+    assert res["processed"] == _days(webtext)
+    assert run_incremental(spark, webtext, gaz, str(root))["processed"] == []

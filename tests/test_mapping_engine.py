@@ -1,10 +1,12 @@
 """map_record / triple-flattening engine tests, incl. the Spark
 mapInPandas path over all 17 reference fixture records."""
 
+import copy
 import json
-from pathlib import Path
 
 from esmarc_spark.mapping.engine import (
+    PLANS,
+    _compile,
     map_record,
     mapped_docs_batches,
     record_to_triples,
@@ -12,6 +14,7 @@ from esmarc_spark.mapping.engine import (
     DOCS_SCHEMA,
     TRIPLES_SCHEMA,
 )
+from esmarc_spark.marc.records import ENTITY_DISPATCH
 from tests.conftest import REFERENCE_IDS, load_fixture_record, needs_reference
 
 
@@ -143,3 +146,180 @@ def test_batch_stages_quarantine_bad_records():
         assert ok_ids.isdisjoint(err_ids)
 
     check()
+
+
+# ---------------------------------------------------------------------------
+# compiled plans: guarded cells skip exactly what map_record would drop
+# ---------------------------------------------------------------------------
+
+_ENTITY_CODE = {"resources": None}
+for _code, _entity in sorted(ENTITY_DISPATCH.items()):
+    _ENTITY_CODE.setdefault(_entity, _code)
+
+_GUARD_TAGS = sorted(
+    set().union(*(g for plan, _ in PLANS.values() for _, _, g in plan if g))
+    - {"001", "003", "005", "008"}
+)
+_INDICATORS = ["__", "1_", "_1", "10", "2_", "7_", "8_", "31", "80", "00", "08", "0_", "04"]
+_CODES = list("abcdefghilpqstuvxyz0249")
+_VALUES = [
+    "(DE-588)4013966-9", "(DE-588)118540238", "(OCoLC)123456789",
+    "(DE-627)1131213920", "datl", "datb", "dats", "datv", "datw", "ortg",
+    "orts", "orta", "adel", "akad", "obin", "geoa", "1749-1832", "1900-",
+    "12.03.1901", "ger", "eng", "1", "2", "Leipzig", "Verlag", "gnd", "rvk",
+    "XA-DE", "E 008 30 00", "300 S.", "",
+]
+
+
+def _unguarded_plans() -> dict:
+    return {
+        entity: (tuple((prop, evaluate, None) for prop, evaluate, _ in plan), card)
+        for entity, (plan, card) in PLANS.items()
+    }
+
+
+def _outcome(record: dict):
+    """map_record's result as canonical JSON; an exception counts as an
+    output, by its type."""
+    try:
+        return json.dumps(map_record(copy.deepcopy(record)), sort_keys=True, ensure_ascii=False)
+    except Exception as e:  # noqa: BLE001 - compared, not swallowed
+        return type(e)
+
+
+def test_guarded_plans_equal_unguarded_plans():
+    """Property: for records of every entity built from the tags the guards
+    name (random indicators, subfields, GND/OCLC ids, $4 codes and the odd
+    malformed cell), the compiled plans map each record exactly as the same
+    plans with every guard stripped — results and exception types alike."""
+    from unittest import mock
+
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    value = st.one_of(
+        st.sampled_from(_VALUES),
+        st.text(max_size=6),
+        st.lists(st.sampled_from(_VALUES), min_size=2, max_size=3),
+    )
+    cell = st.dictionaries(st.sampled_from(_CODES), value, min_size=1, max_size=1)
+    subfields = st.lists(
+        st.one_of(cell, cell, cell, st.just("junk-cell")), min_size=1, max_size=5
+    )
+    occurrence = st.dictionaries(st.sampled_from(_INDICATORS), subfields, min_size=1, max_size=1)
+    field = st.lists(occurrence, min_size=1, max_size=2)
+    fixed = st.builds(
+        lambda ppn, d008: {"001": ppn, "003": "DE-627", "005": "20240101123000.0", "008": d008},
+        st.from_regex(r"[0-9]{8}[0-9X]", fullmatch=True),
+        st.sampled_from(["840101n19501990xx", "991231s1999    gw", "", "x"]),
+    )
+
+    @st.composite
+    def records(draw):
+        entity = draw(st.sampled_from(sorted(PLANS)))
+        record = draw(fixed)
+        if _ENTITY_CODE[entity] is not None:
+            record["079"] = [{"__": [{"b": _ENTITY_CODE[entity]}]}]
+        for tag in draw(st.sets(st.sampled_from(_GUARD_TAGS), max_size=8)):
+            record[tag] = draw(field)
+        return record
+
+    unguarded = _unguarded_plans()
+
+    @settings(max_examples=400, deadline=None)
+    @given(records())
+    def check(record):
+        compiled = _outcome(record)
+        with mock.patch.dict(PLANS, unguarded):
+            assert _outcome(record) == compiled
+
+    check()
+
+
+def test_guard_needs_lookups_only_and_an_empty_result():
+    """A cell is guarded by the tags it looks up only when lookups are all
+    it does and it yields nothing on the empty probe record."""
+    from unittest import mock
+
+    from esmarc_spark.mapping.spec import EXTRACTORS
+
+    fns = {
+        "looks_up": lambda record, key, entity: record.get(key),
+        "contains": lambda record, key, entity: key in record and "x",
+        "indexes": lambda record, key, entity: record[key] if key in record else None,
+        "items": lambda record, key, entity: [k for k, _ in record.items() if k == key],
+        "len": lambda record, key, entity: len(record) > 99,
+        "iter": lambda record, key, entity: [k for k in record if k == key],
+        "raises": lambda record, key, entity: record[key],
+        "truthy": lambda record, key, entity: record.get(key) or ["default"],
+    }
+    cells = {f"multi:{name}": {"fn": name, "key": "100"} for name in fns}
+    cells["single:literal"] = "http://schema.org/Thing"
+    with mock.patch.dict(EXTRACTORS, fns):
+        plan, cardinality = _compile("persons", cells)
+    guards = {prop: guard for prop, _, guard in plan}
+    assert guards == {
+        "looks_up": frozenset({"100"}),
+        "contains": frozenset({"100"}),
+        "indexes": frozenset({"100"}),
+        "items": None,
+        "len": None,
+        "iter": None,
+        "raises": None,
+        "truthy": None,
+        "literal": None,
+    }
+    assert cardinality["looks_up"] == "multi" and cardinality["literal"] == "single"
+
+
+# one record per 079..b code, a title record without 079, and one malformed
+# record whose 548 carries a bare string where a subfield map belongs
+_WORKER_RECORDS = [
+    {"001": "P1", "079": [{"__": [{"b": "p"}]}],
+     "100": [{"1_": [{"a": "Goethe, Johann Wolfgang von"}, {"d": "1749-1832"}]}],
+     "375": [{"__": [{"a": "1"}]}],
+     "548": [{"__": [{"a": "1749-1832"}, {"4": "datl"}]}],
+     "551": [{"__": [{"a": "Frankfurt am Main"}, {"0": "(DE-588)4018118-2"}, {"4": "ortg"}]}]},
+    {"001": "N1", "079": [{"__": [{"b": "n"}]}], "100": [{"0_": [{"a": "Müller, Anna"}]}]},
+    {"001": "S1", "079": [{"__": [{"b": "s"}]}], "150": [{"__": [{"a": "Optik"}]}],
+     "450": [{"__": [{"a": "Lichtlehre"}, {"x": "Theorie"}]}]},
+    {"001": "B1", "079": [{"__": [{"b": "b"}]}],
+     "110": [{"2_": [{"a": "Sächsische Landesbibliothek"}, {"b": "Dresden"}]}],
+     "548": [{"__": [{"a": "1556-"}, {"4": "datb"}]}]},
+    {"001": "G1", "079": [{"__": [{"b": "g"}]}], "151": [{"__": [{"a": "Leipzig"}]}],
+     "034": [{"__": [{"d": "E 012 22 00"}, {"f": "N 051 20 00"}]}]},
+    {"001": "U1", "079": [{"__": [{"b": "u"}]}], "130": [{"__": [{"a": "Faust"}]}],
+     "500": [{"1_": [{"a": "Goethe"}, {"0": "(DE-588)118540238"}, {"4": "aut1"}]}]},
+    {"001": "F1", "079": [{"__": [{"b": "f"}]}],
+     "111": [{"2_": [{"a": "Konzil von Trient"}, {"d": "1545-1563"}]}],
+     "548": [{"__": [{"a": "1545-1563"}, {"4": "datv"}]}]},
+    {"001": "R1", "003": "DE-627", "005": "20240101123000.0",
+     "035": [{"__": [{"a": "(OCoLC)123456789"}]}],
+     "245": [{"10": [{"a": "Faust"}, {"b": "eine Tragödie"}]}],
+     "264": [{"_1": [{"a": "Leipzig"}, {"b": "Insel"}, {"c": "1908"}]}]},
+    {"001": "X1", "079": [{"__": [{"b": "g"}]}], "548": [{"__": ["junk-cell"]}]},
+]
+
+
+def test_spark_worker_maps_like_the_driver(spark):
+    """mapInPandas(mapped_docs_batches) runs the plans compiled at import
+    inside the Python worker: every row equals the driver-side map_record
+    document, and the malformed record lands in __error__."""
+    from esmarc_spark.mapping.engine import ERROR_ENTITY
+
+    rows = [(r["001"], json.dumps(r, ensure_ascii=False)) for r in _WORKER_RECORDS]
+    df = spark.createDataFrame(rows, "record_id string, marc_json string").repartition(2)
+    out = {
+        r["record_id"]: (r["entity"], r["doc"])
+        for r in df.mapInPandas(mapped_docs_batches, schema=DOCS_SCHEMA).collect()
+    }
+    assert len(out) == len(_WORKER_RECORDS)
+    entity, doc = out.pop("X1")
+    assert entity == ERROR_ENTITY
+    assert json.loads(doc)["error"].startswith("AttributeError")
+    expected = {}
+    for record in _WORKER_RECORDS[:-1]:
+        entity, doc = map_record(copy.deepcopy(record))
+        expected[record["001"]] = (entity, json.dumps(doc, sort_keys=True, ensure_ascii=False))
+    assert out == expected
+    assert {e for e, _ in out.values()} == set(PLANS)
