@@ -5,18 +5,19 @@ preferredName, cf. /root/reference/esmarc/esmarc.py:39-237 + id.py:40-50):
 
   page node   subj = page (the url, or "doc://<doc_id>" for documents)
       (page, "@type", "http://schema.org/CreativeWork")
-      (page, "mentions", <entity @id>)            one per detected mention
+      (page, "mentions", <entity @id>)            one per mentioned entity
       (page, "isBasedOn", <source partition uri>) provenance (optional)
   entity node subj = minted "{TARGET_ID}{entity_type}/{authority_id}"
       (entity, "@type", schema.org class)
       (entity, "sameAs", canonical authority URI) the linking edge
       (entity, "preferredName", deterministic min surface form)
 
-``linked_to_triples`` is the one batch emitter; the webtext pipeline, the
-one-job backfill, ``ops.kg_documents.doc_triples`` and
-``ops.crawl.crawl_pipeline`` are adapters over it.  All shapes are pure
-DataFrame expressions, rendered as Spark SQL text (``sqltext``); the only
-aggregation (preferredName) is a min() — skew-immune partial agg.
+``linked_to_triples`` is the only triple emitter; the webtext pipeline, the
+one-job backfill, the streaming foreachBatch runner,
+``ops.kg_documents.doc_triples`` and ``ops.crawl.crawl_pipeline`` are
+adapters over it.  All shapes are pure DataFrame expressions, rendered
+as Spark SQL text (``sqltext``); the only aggregation (preferredName) is
+a min() — skew-immune partial agg.
 """
 
 from __future__ import annotations
@@ -112,8 +113,9 @@ def linked_to_triples(
     rows have page subjects and whose entity rows have minted
     ``TARGET_ID`` subjects (pages never live in that namespace).
 
-    Batch-only: append-mode streaming cannot run the groupBy without a
-    watermark, so streaming composes its page shapes statelessly."""
+    Batch frames only (append-mode streaming cannot run the groupBy
+    without a watermark); streaming calls it once per micro-batch from
+    foreachBatch (``pipeline.streaming.run_page_triples_foreach_batch``)."""
     entity = ("entity_type", "authority_id")
     if same_as is None:
         entity += ("canonical_url",)

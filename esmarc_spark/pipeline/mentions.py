@@ -5,20 +5,24 @@ from already-structured 6xx fields (/root/reference/esmarc/classifications.py:54
 over webtext the structure is gone, so the detector finds gazetteer surface
 forms in free text and S3 re-attaches the typed node via a broadcast join.
 
-Two interchangeable physical strategies:
+* ``detect_mentions_ngram`` — the product path: JVM-only token n-grams
+  joined against the gazetteer, multi-word surface forms included
+  ("Frankfurt am Main"); ``run_pipeline``'s default and the only
+  strategy of the day-partitioned and streaming writers.
 
 * ``detect_mentions`` — one compiled alternation regex (longest-match-first,
-  word-boundary anchored) applied per Arrow batch in a pandas UDF. Scales
-  with gazetteer size ~10^5 surface forms; the pattern ships to executors
-  once per task via closure capture (Spark broadcasts the serialized UDF).
-  Handles multi-word surface forms ("Frankfurt am Main").
+  word-boundary anchored) applied per Arrow batch in a pandas UDF, for
+  exact char-offset / word-boundary semantics. Reached only through
+  ``run_pipeline(mentions_mode="regex")``.
 
-* ``detect_mentions_tokenized`` — pure-JVM path: split/explode/join. No
-  Python at all, but single-token surface forms only. Used as the
-  cross-engine oracle (its plan is directly expressible in ANSI SQL).
+* ``detect_mentions_tokenized`` — pure-JVM split/explode/join over
+  single-token surface forms; a test oracle (its plan is directly
+  expressible in ANSI SQL).
 
-Both return one row per mention occurrence:
-    url, surface_form, position (0-based char offset), lang
+Each returns one row per mention occurrence:
+    url, surface_form, position, lang
+(position is the char offset for the regex scan, the token index for the
+two token paths)
 """
 
 from __future__ import annotations
@@ -367,9 +371,9 @@ def detect_mentions_ngram(
     # strategy AND give the inline path its surface set (streaming always
     # inlines, so it collects everything)
     if webtext.isStreaming:
-        # the direct streaming rendering must inline (append mode forbids
-        # the join path's groupBy) — but inlining a LARGE gazetteer is the
-        # exact plan-size/driver hazard the join path exists to avoid, so
+        # a streaming frame must inline (append mode forbids the join
+        # path's groupBy) — but inlining a LARGE gazetteer is the exact
+        # plan-size/driver hazard the join path exists to avoid, so
         # refuse instead of silently reintroducing it; the foreachBatch
         # runner (pipeline.streaming.run_page_triples_foreach_batch) runs
         # the Bloom+broadcast-join batch path per micro-batch

@@ -14,8 +14,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.errors import AnalysisException
 
+from esmarc_spark.pipeline import fsio
 from esmarc_spark.pipeline.canonicalize import canonical_mapping, rewrite_through_canonical
 from esmarc_spark.pipeline.extract_text import dedup_by_url, with_extracted_text
 from esmarc_spark.pipeline.link import link_mentions
@@ -113,13 +113,12 @@ def prepare_docs(
     repetition_thresholds: tuple[float, float, float] | None = None,
     badword_list=None,
     pii_scrub: bool = False,
-    url_dedup: bool = True,
     dedup_scope: F.Column | None = None,
 ) -> DataFrame:
     """The shared S0.5-S1.5 curation front-end: webtext in, curated docs
-    out. ``run_pipeline`` and the streaming foreachBatch runner both call
-    THIS function, so batch and streaming curation semantics are identical
-    by construction (round 6 — VERDICT r5 #7).
+    out. ``run_pipeline``, the day-partitioned writer and the streaming
+    foreachBatch runner all call THIS function, so a day, a backfill and a
+    micro-batch are curated alike.
 
     ``dedup_scope`` (internal, round 7): a Column over the doc row that
     scopes the CORPUS for stages 3b/3c — line/span frequencies are
@@ -153,23 +152,19 @@ def prepare_docs(
        row per rel=canonical declaration (ops.pagemeta) — collapses
        print/mobile/session duplicates whose urls normalize
        differently; same max_by(warc_ts, url) survivor rule;
-    3. legacy-charset decode + S1 extraction (+ per-url dedup unless
-       ``url_dedup=False`` — the streaming path defers cross-batch url
-       dedup to the downstream idempotent sink);
+    3. legacy-charset decode + S1 extraction + per-url dedup (one row
+       per url of THIS input — a micro-batch dedups within itself);
     3a. mojibake repair — when ``mojibake_repair``, undo UTF-8-as-cp1252
        damage in ``text`` (ops.mojibake). BEFORE content-based dedup and
        gating so repaired text can't split dup groups or skew stats;
     3b. cross-doc line dedup — when ``dedup_lines_min_docs`` is set,
        strip lines occurring in >= that many documents of THIS input
-       (ops.line_dedup). Requires ``url_dedup`` (the row key must be
-       unique) — the streaming runner's per-batch path therefore does
-       not accept it; corpus-level line state across batches belongs to
-       a batch backfill, not a micro-batch. Runs BEFORE the repetition
-       gate so the gate judges real content, not shared boilerplate;
+       (ops.line_dedup), keyed by the url stage 3 made unique. Runs
+       BEFORE the repetition gate so the gate judges real content, not
+       shared boilerplate;
     3c. duplicated-span removal — when ``dedup_spans_k`` is set, cut
        every span duplicated corpus-wide at that k-gram granularity
-       (ops.span_dedup, ExactSubstr semantics). Same unique-row-key
-       requirement as 3b;
+       (ops.span_dedup, ExactSubstr semantics);
     4. repetition gate — row-local Gopher dup-line/char/top-bigram
        fractions vs ``repetition_thresholds`` (see
        GOPHER_REPETITION_THRESHOLDS);
@@ -204,11 +199,11 @@ def prepare_docs(
         # same main_content flag as with_extracted_text below, so legacy
         # and JVM-decoded rows get identical extraction semantics
         webtext = extract_legacy_text(webtext, main_content=main_content)
-    docs = with_extracted_text(
-        webtext, main_content=main_content, charset_aware=charset_aware
+    docs = dedup_by_url(
+        with_extracted_text(
+            webtext, main_content=main_content, charset_aware=charset_aware
+        )
     )
-    if url_dedup:
-        docs = dedup_by_url(docs)
     if mojibake_repair:
         from esmarc_spark.ops.mojibake import fix_mojibake_deep, repair_mojibake
 
@@ -225,12 +220,6 @@ def prepare_docs(
                 *[f"n_repaired_p{k}" for k in range(1, passes + 1)]
             )
     if dedup_lines_min_docs is not None:
-        if not url_dedup:
-            raise ValueError(
-                "dedup_lines_min_docs needs unique row keys: enable "
-                "url_dedup (the streaming per-batch path does not "
-                "support corpus-level line dedup)"
-            )
         from esmarc_spark.ops.line_dedup import remove_duplicate_lines
 
         cleaned = remove_duplicate_lines(
@@ -243,12 +232,6 @@ def prepare_docs(
             cleaned.select("url", "text"), "url"
         )
     if dedup_spans_k is not None:
-        if not url_dedup:
-            raise ValueError(
-                "dedup_spans_k needs unique row keys: enable url_dedup "
-                "(corpus-level span state belongs to a batch backfill, "
-                "not a micro-batch)"
-            )
         from esmarc_spark.ops.span_dedup import remove_duplicate_spans
 
         cleaned = remove_duplicate_spans(
@@ -390,6 +373,22 @@ def run_pipeline(
         badword_list=badword_list,
         pii_scrub=pii_scrub,
     )
+    if canonical_map is None and same_as_edges is not None:
+        canonical_map = canonical_mapping(same_as_edges)
+    linked = _link_docs(docs, gazetteer, canonical_map, mentions_mode)
+    return linked_to_triples(linked, source_index=sql_lit(source_index))
+
+
+def _link_docs(
+    docs: DataFrame,
+    gazetteer: DataFrame,
+    canonical_map: DataFrame | None = None,
+    mentions_mode: str = "ngram",
+) -> DataFrame:
+    """S2 detect -> S3 link -> S4 canonical rewrite (when ``canonical_map``
+    is given): curated docs in, linked mention rows out. The one S2-S4
+    composition of ``run_pipeline``, the day-partitioned writer and the
+    streaming foreachBatch runner."""
     if mentions_mode == "ngram":
         mentions = detect_mentions_ngram(docs, gazetteer)
     elif mentions_mode == "regex":
@@ -398,11 +397,9 @@ def run_pipeline(
     else:
         raise ValueError(f"mentions_mode must be 'ngram' or 'regex', not {mentions_mode!r}")
     linked = link_mentions(mentions, gazetteer)
-    if canonical_map is None and same_as_edges is not None:
-        canonical_map = canonical_mapping(same_as_edges)
     if canonical_map is not None:
         linked = rewrite_through_canonical(linked, canonical_map, "canonical_url")
-    return linked_to_triples(linked, source_index=sql_lit(source_index))
+    return linked
 
 
 def _curated_day_docs(
@@ -435,12 +432,10 @@ def _folded_docs_to_triples(
     ``run_pipeline`` does not pay: the emitter's first groupBy keys on the
     unfolded url, a new expression, so it cannot reuse dedup_by_url's
     hash(folded url) partitioning (~0.25 s per 5k-doc day on local[4])."""
-    mentions = detect_mentions_ngram(docs, gazetteer)
-    linked = link_mentions(mentions, gazetteer)
-    if canonical_map is not None:
-        linked = rewrite_through_canonical(linked, canonical_map, "canonical_url")
-    linked = linked.withColumn("pday", F.substring("url", 1, 10)).withColumn(
-        "url", F.expr("substring(url, 11)")
+    linked = (
+        _link_docs(docs, gazetteer, canonical_map)
+        .withColumn("pday", F.substring("url", 1, 10))
+        .withColumn("url", F.expr("substring(url, 11)"))
     )
     return linked_to_triples(linked, "pday", keys=("pday",))
 
@@ -549,16 +544,21 @@ def _write_days(
         f"{out_root}/triples"
     )
 
-    try:
+    # a day that mentions nothing writes no pday= directory; while no day
+    # ever has, triples/ holds no partition and there is nothing to read
+    # back (schema inference would fail on it). The read infers its schema
+    # from the files' footers, so a corrupt footer fails it before a
+    # lineage row is recorded.
+    tcounts = {}
+    if fsio.list_child_dirs(f"{out_root}/triples", "pday="):
         # filter on the RAW partition column first — casting pday before
         # the filter would wrap the partition column in an expression and
-        # defeat partition pruning, turning the lineage count-back into a
-        # full scan of every day ever written. Partition inference types
-        # pday as DATE, so the IN-list literals are coerced (not the
-        # column); the string cast happens after, for the lineage keys.
-        written = spark.read.parquet(f"{out_root}/triples")
+        # defeat partition pruning. Partition inference types pday as
+        # DATE, so the IN-list literals are coerced (not the column); the
+        # string cast happens after, for the lineage keys.
         written = (
-            written.where(F.col("pday").isin(days))
+            spark.read.parquet(f"{out_root}/triples")
+            .where(F.col("pday").isin(days))
             .withColumn("pday", F.col("pday").cast("string"))
         )
         tcounts = {
@@ -572,21 +572,6 @@ def _write_days(
             )
             .collect()
         }
-    except AnalysisException as exc:
-        # ONLY the empty-path shape (no day has emitted a triple yet:
-        # nothing has ever been written under triples/) maps to zero
-        # counts. Any other failure — corrupt footer, transient store
-        # error — must propagate: swallowing it would record
-        # status='done' with n_triples=0 for every day, corrupting
-        # lineage while marking the partitions complete.
-        msg = str(exc)
-        if not (
-            "PATH_NOT_FOUND" in msg
-            or "UNABLE_TO_INFER_SCHEMA" in msg
-            or "unable to infer schema" in msg.lower()
-        ):
-            raise
-        tcounts = {}
     dcounts = {
         r["pday"]: r
         for r in part.groupBy("pday")

@@ -697,9 +697,8 @@ def read_warc_stream(
     DISCOVERY (binaryFile listing + checkpoint offsets live in the JVM);
     the member BYTES are then opened executor-side through
     ``pyarrow.fs.FileSystem.from_uri`` exactly like the batch reader —
-    never materialized as rows. Compose with
-    ``pipeline.streaming.page_triples`` or a foreachBatch runner for the
-    large-gazetteer join path."""
+    never materialized as rows. Feed it to
+    ``pipeline.streaming.run_page_triples_foreach_batch(stream=...)``."""
     if errors not in ("skip", "quarantine"):
         raise ValueError(f"errors must be skip|quarantine, got {errors!r}")
     reader = spark.readStream.format("binaryFile").schema(_BINARYFILE_SCHEMA)

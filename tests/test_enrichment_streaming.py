@@ -1,5 +1,5 @@
 """Enrichment joins (sameAs + spatial grid-cell) and the Structured
-Streaming AvailableNow rendering of the pipeline."""
+Streaming AvailableNow catch-up runs of the pipeline."""
 
 import math
 
@@ -7,7 +7,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from esmarc_spark.pipeline.enrichment import enrich_same_as, spatial_enrich
-from esmarc_spark.pipeline.streaming import run_available_now, stream_page_triples
+from esmarc_spark.pipeline.streaming import (
+    read_page_triples,
+    run_page_triples_foreach_batch,
+)
 from esmarc_spark.pipeline.webtext import gazetteer_df, synth_webtext
 
 
@@ -116,10 +119,14 @@ def test_streaming_available_now(spark, tmp_path):
         str(tmp_path / "ckpt"),
     )
     gaz = gazetteer_df(spark)
+
+    def catch_up():
+        run_page_triples_foreach_batch(spark, in_dir, gaz, out_dir, ckpt)
+        return read_page_triples(spark, out_dir).count()
+
     batch1 = synth_webtext(spark, n_docs=80, partitions=2, dup_fraction=0)
     batch1.write.mode("append").parquet(in_dir)
-    run_available_now(spark, in_dir, gaz, out_dir, ckpt)
-    first = spark.read.parquet(out_dir).count()
+    first = catch_up()
     assert first > 0
 
     # new files arrive; a second AvailableNow run processes ONLY them
@@ -127,10 +134,8 @@ def test_streaming_available_now(spark, tmp_path):
         F.xxhash64("url") % 2 == 0
     )
     batch2.write.mode("append").parquet(in_dir)
-    run_available_now(spark, in_dir, gaz, out_dir, ckpt)
-    second = spark.read.parquet(out_dir).count()
+    second = catch_up()
     assert second > first
 
     # third run with nothing new: no growth (exactly-once via checkpoint)
-    run_available_now(spark, in_dir, gaz, out_dir, ckpt)
-    assert spark.read.parquet(out_dir).count() == second
+    assert catch_up() == second

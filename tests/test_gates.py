@@ -114,8 +114,6 @@ def test_host_rollup_oracle_parity(spark, tmp_path):
 def test_prepare_docs_badwords_and_span_knobs(spark):
     import datetime as dt
 
-    import pytest as _pt
-
     from esmarc_spark.pipeline.run import prepare_docs
 
     t0 = dt.datetime(2024, 5, 1)
@@ -146,9 +144,6 @@ def test_prepare_docs_badwords_and_span_knobs(spark):
     assert span not in docs["https://a.example/1"]
     assert "unique alpha" in docs["https://a.example/1"]
     assert span not in docs["https://a.example/2"]
-
-    with _pt.raises(ValueError):
-        prepare_docs(wt, dedup_spans_k=13, url_dedup=False)
 
 
 def test_prepare_docs_mojibake_repair_knob(spark):

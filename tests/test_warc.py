@@ -305,8 +305,8 @@ def test_warc_streaming_source_exactly_once(spark, tmp_path):
     members arriving between catch-up runs are processed exactly once
     (file offsets live in the checkpoint), and the final triples equal
     the batch pipeline over all members."""
+    from esmarc_spark.pipeline.run import run_pipeline
     from esmarc_spark.pipeline.streaming import (
-        page_triples,
         read_page_triples,
         run_page_triples_foreach_batch,
     )
@@ -343,10 +343,8 @@ def test_warc_streaming_source_exactly_once(spark, tmp_path):
     want = sorted(
         map(
             tuple,
-            page_triples(
-                __import__("esmarc_spark.pipeline.warc", fromlist=["read_warc"])
-                .read_warc(spark, str(drop)),
-                gaz,
+            run_pipeline(
+                read_warc(spark, str(drop)), gaz, source_index="webtext-stream"
             ).collect(),
         )
     )
